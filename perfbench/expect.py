@@ -234,10 +234,14 @@ def lifecycle_expected(rnd: gen.LifecycleRound, timeout: dt.timedelta) -> dict[s
     return out
 
 
-def check_lifecycle(rows: list[dict], expected: dict[str, tuple]) -> tuple[list[str], int]:
-    """Compare the emitted outcomes with the fold. A trip with more than
-    one outcome is a failed operation, not a wrong result; every trip
-    with exactly one outcome must match. Returns (errors, failed)."""
+def check_lifecycle(
+    rows: list[dict], expected: dict[str, tuple], fault_ids: set[str]
+) -> tuple[list[str], int]:
+    """Compare the emitted outcomes with the fold. Every trip must have
+    the fold's outcome. A planted fault trip (``fault_ids``) with more
+    than one outcome is a failed operation, not a wrong result, as long
+    as its extra outcomes keep its pickup; a second outcome for any
+    other trip is an error. Returns (errors, failed)."""
     by_trip: dict[str, list[tuple]] = {}
     for row in rows:
         fare = row["fare_amount"]
@@ -246,14 +250,26 @@ def check_lifecycle(rows: list[dict], expected: dict[str, tuple]) -> tuple[list[
              None if fare is None else fare)
         )
     errors = []
-    failed = sum(1 for outs in by_trip.values() if len(outs) > 1)
+    failed = 0
     for trip_id in expected.keys() - by_trip.keys():
         errors.append(f"trip {trip_id} has no outcome")
     for trip_id in by_trip.keys() - expected.keys():
         errors.append(f"unexpected trip {trip_id}")
     for trip_id, outs in by_trip.items():
-        if len(outs) == 1 and trip_id in expected and outs[0] != expected[trip_id]:
-            errors.append(f"trip {trip_id}: got {outs[0]}, want {expected[trip_id]}")
+        want = expected.get(trip_id)
+        if want is None:
+            continue
+        if want not in outs:
+            errors.append(f"trip {trip_id}: got {outs}, want {want}")
+        elif len(outs) > 1:
+            extra = list(outs)
+            extra.remove(want)
+            if trip_id not in fault_ids:
+                errors.append(f"trip {trip_id}: extra outcomes {extra}")
+            elif any(o[1] != want[1] for o in extra):
+                errors.append(f"fault trip {trip_id}: extra outcome with another pickup {extra}")
+            else:
+                failed += 1
     return errors[:10], failed
 
 
@@ -343,17 +359,23 @@ def self_test(seed: int) -> int:
         {"trip_id": k, "status": v[0], "pickup_datetime": v[1], "dropoff_datetime": v[2], "fare_amount": v[3]}
         for k, v in exp.items()
     ]
-    errs, failed = check_lifecycle(out_rows, exp)
+    errs, failed = check_lifecycle(out_rows, exp, rnd.fault_ids)
     expect("lifecycle", errs, False)
     if failed:
         failures.append(f"lifecycle: {failed} failed on the expected rows")
-    done = next(r for r in out_rows if r["status"] == "completed")
+    done = next(r for r in out_rows if r["status"] == "completed" and r["trip_id"] not in rnd.fault_ids)
     planted_rows = [dict(r) for r in out_rows]
     planted_rows[out_rows.index(done)]["fare_amount"] += 1.0
-    expect("lifecycle planted fare", check_lifecycle(planted_rows, exp)[0], True)
-    errs, failed = check_lifecycle(out_rows + [dict(done, status="expired")], exp)
+    expect("lifecycle planted fare", check_lifecycle(planted_rows, exp, rnd.fault_ids)[0], True)
+    expect("lifecycle planted second outcome",
+           check_lifecycle(out_rows + [dict(done, status="expired")], exp, rnd.fault_ids)[0], True)
+    fault = next(r for r in out_rows if r["trip_id"] in rnd.fault_ids)
+    errs, failed = check_lifecycle(out_rows + [dict(fault, status="expired")], exp, rnd.fault_ids)
     if errs or failed != 1:
-        failures.append(f"lifecycle second outcome: errors={errs[:1]}, failed={failed}")
+        failures.append(f"lifecycle fault second outcome: errors={errs[:1]}, failed={failed}")
+    wrong_first = [dict(r, fare_amount=r["fare_amount"] + 1.0) if r is fault else r for r in out_rows]
+    expect("lifecycle planted fault fare",
+           check_lifecycle(wrong_first + [dict(fault, status="expired")], exp, rnd.fault_ids)[0], True)
     for f in failures:
         print("FAIL", f)
     print("self-test", "failed" if failures else "passed")

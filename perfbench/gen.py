@@ -146,10 +146,10 @@ class TripWire:
         *,
         trips_per_batch: int,
         span: dt.timedelta,
-        p_redeliver: float = 0.10,
-        p_malformed: float = 0.005,
-        p_no_end: float = 0.03,
-        prefix: str = "t",
+        p_redeliver: float,
+        p_malformed: float,
+        p_no_end: float,
+        prefix: str,
     ):
         self.rng = random.Random(seed)
         self.producer = Producer(self.rng, p_redeliver=p_redeliver, p_malformed=p_malformed)
@@ -207,11 +207,12 @@ class LifecycleRound:
 
     batches: list[Batch]
     trips: list[Trip]
+    fault_ids: set[str]  # trips whose start is redelivered after completion
 
 
 #: trip-state stream shape (see README "Inputs").
 LIFECYCLE_SPAN = dt.timedelta(minutes=10)
-LIFECYCLE_BATCHES = 4
+LIFECYCLE_BATCHES = 6
 LIFECYCLE_TIMEOUT = dt.timedelta(minutes=30)
 #: the tick is the last record of a round: an end event for no trip,
 #: far enough ahead that the watermark passes every open trip's timeout.
@@ -224,9 +225,9 @@ def lifecycle_round(
     *,
     trips: int,
     faulty: int,
-    p_redeliver: float = 0.10,
-    p_no_end: float = 0.05,
-    p_late_end: float = 0.05,
+    p_redeliver: float,
+    p_no_end: float,
+    p_late_end: float,
 ) -> LifecycleRound:
     """Make round ``rnd`` of the trip-state workload.
 
@@ -249,12 +250,14 @@ def lifecycle_round(
     trip_list: list[Trip] = []
     for i, role in enumerate(roles):
         if role == "late":
-            # ends 32-35 min after a start in the first 5 min: inside the
-            # round, past the 30 min timeout even after minute truncation
-            start = base + dt.timedelta(seconds=rng.uniform(0, 300))
+            # ends 32-35 min after a start that leaves 40 min of the
+            # round: inside it, past the 30 min timeout even after
+            # minute truncation
+            start = base + dt.timedelta(seconds=rng.uniform(0, (LIFECYCLE_BATCHES - 4) * span_s))
             end = start + dt.timedelta(seconds=rng.uniform(1920, 2100))
         else:
-            start = base + dt.timedelta(seconds=rng.uniform(0, 2 * span_s))
+            # starts leave 20 min of the round, so every end lands in it
+            start = base + dt.timedelta(seconds=rng.uniform(0, (LIFECYCLE_BATCHES - 2) * span_s))
             end = None
             if role == "done":
                 end = start + dt.timedelta(seconds=rng.uniform(300, 1200))
@@ -299,7 +302,7 @@ def lifecycle_round(
     tick_t = base + LIFECYCLE_BATCHES * LIFECYCLE_SPAN + dt.timedelta(hours=3)
     tick = Trip(TICK_TRIP_ID, tick_t, tick_t, 0, 0)
     batches[-1].records.append(producer.record(LIFECYCLE_BATCHES - 1, tick, "end"))
-    return LifecycleRound(batches, trip_list)
+    return LifecycleRound(batches, trip_list, fault_ids)
 
 
 #: the stream whose first file holds only malformed records; it does

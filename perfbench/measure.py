@@ -1,9 +1,11 @@
-"""Measurement from the benchmark's side: stream progress, summed RSS,
-spans around calls into the package, and the Spark event log.
+"""Measurement from the benchmark's side: stream progress, CPU time
+stolen by the hypervisor, summed RSS, spans around calls into the
+package, and the Spark event log.
 
 Nothing here changes what the program does. The progress log and the
-RSS sampler run in every run (they feed ``op_s_p50`` and
-``peak_rss_mib``); spans and the event log only in traced runs.
+steal meter run in every run (they feed ``op_s_p50``, ``events_per_s``
+and ``setup_s``); the RSS sampler, spans and the event log only in
+traced runs.
 """
 
 from __future__ import annotations
@@ -63,6 +65,41 @@ def query_id(checkpoint_dir: str) -> str:
     """A stream's id, which its checkpoint keeps across restarts."""
     with open(os.path.join(checkpoint_dir, "metadata")) as f:
         return json.loads(f.readline())["id"]
+
+
+def _cpu_ticks() -> tuple[int, int]:
+    """(busy, stolen) CPU ticks of the machine since boot (/proc/stat)."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:]] + [0] * 8
+    user, nice, system, _idle, _iowait, irq, softirq, steal = v[:8]
+    return user + nice + system + irq + softirq, steal
+
+
+class Steal:
+    """Share of the CPU time this machine's busy vCPUs wanted that the
+    hypervisor gave to other guests, over the intervals measured with
+    ``with meter(): ...``. An idle vCPU accrues no steal, so the share is
+    taken over busy plus stolen ticks: a thread that ran for ``w``
+    seconds of wall time had about ``w * (1 - share)`` of CPU."""
+
+    def __init__(self) -> None:
+        self.busy = 0
+        self.stolen = 0
+
+    @contextmanager
+    def __call__(self):
+        b0, s0 = _cpu_ticks()
+        try:
+            yield
+        finally:
+            b1, s1 = _cpu_ticks()
+            self.busy += b1 - b0
+            self.stolen += s1 - s0
+
+    @property
+    def share(self) -> float:
+        total = self.busy + self.stolen
+        return self.stolen / total if total else 0.0
 
 
 def _tree(root_pid: int) -> list[int]:

@@ -13,13 +13,16 @@ import gen
 #: ingest: ~1,050 events per micro-batch file, 6 h of event time per
 #: file (so streams cross event dates and the 1-day dedup horizon
 #: prunes the bronze key probe), 10 % redelivered 0-2 batches later,
-#: 0.5 % malformed.
+#: 0.5 % malformed, 3 % of trips never end.
 INGEST_TRIPS_PER_BATCH = 500
 INGEST_SPAN = dt.timedelta(hours=6)
+P_REDELIVER = 0.10
+P_MALFORMED = 0.005
+P_NO_END = 0.03
 #: micro-batches per ``run_ingest`` call; each run makes whole rounds
 #: of this many batches plus one all-malformed-first stream. A round
 #: takes longer than ``run_seconds`` on this box, so a run makes one.
-INGEST_BATCHES_PER_ROUND = 4
+INGEST_BATCHES_PER_ROUND = 6
 #: files of the untimed warm-up stream.
 INGEST_WARM_FILES = 2
 
@@ -33,27 +36,36 @@ GOLD_WARM_REFRESHES = 3
 #: refreshes, and layer-by-layer passes, in a traced run.
 GOLD_TRACED_REFRESHES = 3
 
-#: trip state: per round 400 trips over four 10-minute files, with a
-#: 30 min timeout; 5 % never end, 5 % end after the timeout and 4
+#: trip state: per round 2,000 trips over six 10-minute files (~720
+#: events per file, 250-1,100), with a 30 min timeout; 5 % never end,
+#: 5 % end after the timeout, 10 % of events are redelivered and 1 % of
 #: trips get a start redelivered after their completion.
-LIFECYCLE_TRIPS = 400
-LIFECYCLE_FAULTY = 4
+LIFECYCLE_TRIPS = 2000
+LIFECYCLE_FAULTY = 20
+LIFECYCLE_P_NO_END = 0.05
+LIFECYCLE_P_LATE_END = 0.05
 
 #: warm-up inputs are made from a seed the timed inputs never use.
 WARM_SEED_OFFSET = 7_919
 
 
-def ingest_wire(seed: int, prefix: str = "t") -> gen.TripWire:
+def _wire(seed: int, trips_per_batch: int, span: dt.timedelta, prefix: str) -> gen.TripWire:
     return gen.TripWire(
-        seed, trips_per_batch=INGEST_TRIPS_PER_BATCH, span=INGEST_SPAN, prefix=prefix
+        seed, trips_per_batch=trips_per_batch, span=span, p_redeliver=P_REDELIVER,
+        p_malformed=P_MALFORMED, p_no_end=P_NO_END, prefix=prefix,
     )
+
+
+def ingest_wire(seed: int, prefix: str = "t") -> gen.TripWire:
+    return _wire(seed, INGEST_TRIPS_PER_BATCH, INGEST_SPAN, prefix)
 
 
 def gold_wire(seed: int, prefix: str = "g") -> gen.TripWire:
-    return gen.TripWire(
-        seed, trips_per_batch=GOLD_TRIPS_PER_BATCH, span=GOLD_SPAN, prefix=prefix
-    )
+    return _wire(seed, GOLD_TRIPS_PER_BATCH, GOLD_SPAN, prefix)
 
 
 def lifecycle_round(seed: int, rnd: int, trips: int = LIFECYCLE_TRIPS) -> gen.LifecycleRound:
-    return gen.lifecycle_round(seed, rnd, trips=trips, faulty=LIFECYCLE_FAULTY * trips // LIFECYCLE_TRIPS)
+    return gen.lifecycle_round(
+        seed, rnd, trips=trips, faulty=LIFECYCLE_FAULTY * trips // LIFECYCLE_TRIPS,
+        p_redeliver=P_REDELIVER, p_no_end=LIFECYCLE_P_NO_END, p_late_end=LIFECYCLE_P_LATE_END,
+    )
