@@ -1,4 +1,4 @@
-"""Daily KPI aggregation (operators A1, A2, P12, L1).
+"""Daily KPI aggregation (operators A1, A2, P12).
 
 Reference: group completed trips by dropoff date and compute
 sum/count/avg/min/max of ``fare_amount``
@@ -40,13 +40,6 @@ def daily_kpis(
         )
         .na.fill(0)
     )
-
-
-def sample_rows(df: DataFrame, n: int = 5) -> list:
-    """L1: the reference's debug ``limit(5).collect()``
-    (KPI-Aggregator.py:113-114). Driver-side by design; never use in a
-    transform."""
-    return df.limit(n).collect()
 
 
 def incremental_daily_refresh(

@@ -12,13 +12,12 @@ the trip-key stand-in, ``event_type`` the start/end discriminator,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nsp_bolt_pipeline_spark.operators.completion import completed_trips
 from nsp_bolt_pipeline_spark.operators.dedup import first_write_wins
 from nsp_bolt_pipeline_spark.operators.kpi import daily_kpis
-from nsp_bolt_pipeline_spark.sources.readers import read_table as load_table
 
 #: events-table stand-ins for the two trip streams.
 START_EVENT, END_EVENT = "signup", "purchase"
@@ -67,10 +66,3 @@ def trip_daily_kpis(starts: DataFrame, ends: DataFrame) -> DataFrame:
     )
     completed = completed_trips(starts_d, ends_d)
     return daily_kpis(completed)
-
-
-def run_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load the events table and run the full pipeline."""
-    events = load_table(spark, sf_dir, "events")
-    starts, ends = events_as_trip_streams(events)
-    return trip_daily_kpis(starts, ends)

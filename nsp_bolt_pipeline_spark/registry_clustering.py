@@ -668,17 +668,6 @@ _ANN_Q = 10  # matches registry_similarity.N_QUERIES / K
 _ANN_K = 10
 
 
-def _jl_proj_list_sql(v: str = "embedding") -> str:
-    mat = ", ".join(
-        "[" + ", ".join(repr(x) for x in row) + "]" for row in _JL_SIGNS
-    )
-    return (
-        f"list_transform(range(1, {JL_K} + 1), "
-        f"j -> {_JL_SCALE} * list_sum(list_transform(range(1, {DIM} + 1), "
-        f"i -> CAST({v}[i] AS DOUBLE) * ([{mat}])[j][i])))"
-    )
-
-
 def _list_cos_sql(a: str, b: str, n: int) -> str:
     d = (
         f"list_sum(list_transform(range(1, {n} + 1), "

@@ -304,31 +304,6 @@ _SRP_RESCORE = f"""
     """
 
 
-def _srp_pairs_sql(*, multiprobe: bool = False) -> str:
-    """DuckDB replay of the full SRP-LSH pipeline (planes, sign bits,
-    band keys, candidate join, exact-cosine rescore) — shared by the
-    pairs entry, the clusters composition, and (with
-    ``multiprobe=True``, which widens the candidate condition to
-    band keys within Hamming distance 1) the multi-probe entry."""
-    if multiprobe:
-        flips = ", ".join(str(1 << i) for i in range(_SRP_R))
-        key_cond = (
-            f"(a.bkey = b.bkey OR xor(a.bkey, b.bkey) IN ({flips}))"
-        )
-    else:
-        key_cond = "a.bkey = b.bkey"
-    return f"""
-    WITH {_srp_keys_ctes()},
-    cand AS (
-        SELECT DISTINCT a.vec_id AS d1, b.vec_id AS d2
-        FROM keys a
-        JOIN keys b ON a.band = b.band AND {key_cond}
-                   AND a.vec_id < b.vec_id
-    )
-    {_SRP_RESCORE}
-    """
-
-
 #: hot-bucket cap for the GUARDED SRP twins. Chosen so the STAR path
 #: actually fires on the driver corpus (bucket df at sf0.01 tops out
 #: at 11 with seven buckets above 8) while most buckets stay on the

@@ -1,9 +1,9 @@
 """Streaming oracle queries: each runs a real Structured Streaming
-query with ``trigger(availableNow=True)`` over a deterministic JSON
-dump of the ``events`` table, then returns the materialized sink for
-the driver's DuckDB hash compare. Streaming result ≡ batch result is
-the whole point (SURVEY.md §2.8): the same oracle that verifies the
-batch operator verifies its streaming form.
+query to completion (``streaming.run.run_available_now``) over a
+deterministic JSON dump of the ``events`` table, then returns the
+materialized sink for the driver's DuckDB hash compare. Streaming
+result ≡ batch result is the whole point (SURVEY.md §2.8): the same
+oracle that verifies the batch operator verifies its streaming form.
 
 Determinism: the dump is ordered by (ts, event_id) into range-
 partitioned files (streaming.replay), timestamps ride the wire as
@@ -58,6 +58,7 @@ from nsp_bolt_pipeline_spark.streaming.replay import (
     dump_json_batches,
     encode_event_times,
 )
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 from nsp_bolt_pipeline_spark.streaming.trip_state import track_trip_lifecycle
 
 #: events wire schema: ts travels as epoch-micros (see module docstring).
@@ -636,15 +637,10 @@ def q_stream_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = decode_event_times(spark.readStream.schema(schema).json(dirs["src"]), ["ts"])
     out = track_trip_lifecycle(stream, timeout_ms=_LIFECYCLE_TIMEOUT_MS)
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", dirs["out"])
-        .option("checkpointLocation", dirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        out.writeStream.format("parquet").option("path", dirs["out"]),
+        dirs["ckpt"],
     )
-    q.awaitTermination()
     return spark.read.parquet(dirs["out"]).select(
         "trip_id", "status", "pickup_datetime", "dropoff_datetime", "fare_amount"
     )
@@ -1387,15 +1383,10 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = track_user_ewma(
         stream, horizon_ms=_EWMA_HORIZON_MS, watermark_delay="1 hour"
     )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", dirs["out"])
-        .option("checkpointLocation", dirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        out.writeStream.format("parquet").option("path", dirs["out"]),
+        dirs["ckpt"],
     )
-    q.awaitTermination()
     return spark.read.parquet(dirs["out"]).select(
         "user_id", "n_events", "ewma"
     )
@@ -1488,7 +1479,7 @@ def q_stream_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     n_day_files = len(os.listdir(dirs["src"]))
     with _replay_shuffle(spark, dirs["src"], n_batches=n_day_files):
-        q = run_dq_gated_ingest(
+        run_dq_gated_ingest(
             stream,
             suite,
             good_dir=dirs["out"],
@@ -1496,7 +1487,6 @@ def q_stream_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             metrics_dir=os.path.join(dirs["out"] + "_metrics"),
             checkpoint_dir=dirs["ckpt"],
         )
-        q.awaitTermination()
     from nsp_bolt_pipeline_spark.streaming.ingest import dir_exists
 
     cols = ["event_id", "ts", "user_id", "event_type", "value"]
@@ -1622,15 +1612,10 @@ def q_stream_daily_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch parallelism) bounds the state-store/commit overhead the
     # two micro-batches pay
     with _replay_shuffle(spark, dirs["src"]):
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", dirs["out"])
-            .option("checkpointLocation", dirs["ckpt"])
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            out.writeStream.format("parquet").option("path", dirs["out"]),
+            dirs["ckpt"],
         )
-        q.awaitTermination()
     return spark.read.parquet(dirs["out"]).select("day", "event_id", "h")
 
 
@@ -1767,13 +1752,9 @@ def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     with _replay_shuffle(spark, dirs["src"]):
-        q = (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", dirs["ckpt"])
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            stream.writeStream.foreachBatch(process_batch), dirs["ckpt"]
         )
-        q.awaitTermination()
     return spark.read.parquet(dirs["out"]).select("vec_id", "cid")
 
 

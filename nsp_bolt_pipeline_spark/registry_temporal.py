@@ -1558,6 +1558,7 @@ def q_stream_t19_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         SENTINEL_USER,
         track_debounce,
     )
+    from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 
     dirs = _workdir("stream_debounce")
     ev = read_table(spark, sf_dir, "events").select(
@@ -1582,15 +1583,10 @@ def q_stream_t19_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = track_debounce(
         stream, min_gap_s=T19_GAP_S, horizon_ms=3_600_000
     )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", dirs["out"])
-        .option("checkpointLocation", dirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        out.writeStream.format("parquet").option("path", dirs["out"]),
+        dirs["ckpt"],
     )
-    q.awaitTermination()
     return spark.read.parquet(dirs["out"]).select(
         "user_id", "event_type", "event_id", "ts_us"
     )

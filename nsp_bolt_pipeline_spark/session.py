@@ -77,14 +77,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def configure_for_oracle(spark: SparkSession) -> SparkSession:
-    """Pin runtime confs that affect result comparison against DuckDB.
-
-    Session timezone must be fixed so date extraction from naive
-    parquet timestamps is wall-clock-stable (DuckDB timestamps are
-    TZ-naive). Safe to call on a session we did not create.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

@@ -52,6 +52,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
+
 
 def delta_available() -> bool:
     """True when the delta-spark Python package is importable."""
@@ -181,13 +183,9 @@ def run_silver_upsert_delta(
             .execute()
         )
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()
     return silver_path
 
 
@@ -228,13 +226,9 @@ def run_scd2_history_delta(
             .save(table_path)
         )
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()
     return table_path
 
 

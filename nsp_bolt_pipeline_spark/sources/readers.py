@@ -135,21 +135,6 @@ def with_corrupt_record(schema: T.StructType) -> T.StructType:
     )
 
 
-def read_json_events(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """S3: JSON event batches with corrupt-record capture. PERMISSIVE
-    mode lands unparseable payloads in ``_corrupt_record`` so the DLQ
-    split (S8) can route them, mirroring Lambda's decode-failure path
-    (TripStartProcessor.py:128-134)."""
-    return (
-        spark.read.schema(with_corrupt_record(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
 def decode_base64_payload(df: DataFrame, col: str, *, out: str | None = None) -> DataFrame:
     """S3 decode step: Kinesis delivers base64-encoded payloads which
     the Lambda decodes before json.loads (reference:

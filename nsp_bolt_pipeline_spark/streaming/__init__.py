@@ -13,6 +13,9 @@ validate + dedup + store (TripStartProcessor.py:60-122), DLQ routing
 - ``completion`` : stream-stream completion join with watermarks +
                    time-range state bound (the README-claimed behavior,
                    README.md:79,92, that the reference never implemented)
+- ``run``        : ``run_available_now`` — the one run path of every
+                   engine query: checkpoint, availableNow trigger, start,
+                   wait for termination
 
 Every transform reuses the batch functions (pure DataFrame -> DataFrame),
 so an ``availableNow`` run over a deterministic event dump reproduces

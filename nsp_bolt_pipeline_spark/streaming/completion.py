@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
+
 
 def streaming_completed_trips(
     starts: DataFrame,
@@ -267,13 +269,7 @@ def run_capped_completion_log(
                 True,
             )
 
-    q = (
-        wire.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(wire.writeStream.foreachBatch(fold), checkpoint_dir)
 
 
 def read_keeper_state(spark, state_root: str) -> DataFrame:
@@ -301,12 +297,7 @@ def run_completion_join(
     """Run the join to completion (availableNow), appending matches to
     ``out_dir``. The emitted match set is order-independent, so the
     result is deterministic and oracle-comparable."""
-    query = (
-        completed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        completed.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
     )
-    query.awaitTermination()

@@ -21,6 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from nsp_bolt_pipeline_spark.operators.expectations import run_expectations
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 
 
 def run_dq_gated_ingest(
@@ -31,8 +32,8 @@ def run_dq_gated_ingest(
     quarantine_dir: str,
     metrics_dir: str,
     checkpoint_dir: str,
-):
-    """Start the gated availableNow ingest; returns the query."""
+) -> None:
+    """Run the gated ingest to completion."""
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         # persist: the expectation aggregation and the publish write
@@ -69,9 +70,4 @@ def run_dq_gated_ingest(
         finally:
             batch_df.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    run_available_now(stream.writeStream.foreachBatch(gate), checkpoint_dir)

@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
+
 
 def publish_dimension_snapshot(
     dim: DataFrame, path: str, *, spark: SparkSession | None = None
@@ -125,15 +127,10 @@ def run_enrich(
 ) -> None:
     """Append-mode availableNow run of the enrichment (stateless, so
     every input row lands exactly once regardless of watermarks)."""
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        enriched.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def enrich_stream_point_in_time(

@@ -46,6 +46,7 @@ from nsp_bolt_pipeline_spark.functions.validation import (
 )
 from nsp_bolt_pipeline_spark.operators.dedup import first_write_wins
 from nsp_bolt_pipeline_spark.sources.readers import with_corrupt_record
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 
 
 def read_wire_stream(
@@ -116,7 +117,7 @@ EVENT_DATE_COL = "event_date"
 def seen_keys(
     spark: SparkSession,
     bronze_dir: str,
-    dedup_keys: Sequence[str],
+    key_schema: T.StructType,
     *,
     min_event_date=None,
 ) -> DataFrame:
@@ -124,11 +125,23 @@ def seen_keys(
     bronze. With ``min_event_date`` set (a ``date`` value), the scan is
     pruned to ``event_date`` partitions at or after it — a partition-
     pruned read (PartitionFilters in the scan node), so per-batch cost
-    is bounded by the horizon, not by total table age."""
-    seen = spark.read.parquet(bronze_dir)
+    is bounded by the horizon, not by total table age.
+
+    The read schema is pinned to ``key_schema`` (plus ``event_date``
+    when pruning), never inferred: a bronze directory whose only
+    append so far was an empty batch holds no data file to infer
+    from, and must read as zero keys. Partition columns among the keys
+    are still filled from the directory names."""
+    schema = key_schema
+    if min_event_date is not None:
+        schema = T.StructType(
+            list(key_schema.fields)
+            + [T.StructField(EVENT_DATE_COL, T.DateType())]
+        )
+    seen = spark.read.schema(schema).parquet(bronze_dir)
     if min_event_date is not None:
         seen = seen.filter(F.col(EVENT_DATE_COL) >= F.lit(min_event_date))
-    return seen.select(*dedup_keys).dropDuplicates()
+    return seen.select(*key_schema.names).dropDuplicates()
 
 
 def _effective_salt(
@@ -165,10 +178,11 @@ def run_ingest(
     dedup_horizon_days: int | None = None,
     files_per_partition: int = 2,
 ) -> None:
-    """The full ingest query, run to completion with
-    ``trigger(availableNow=True)`` (the reference's daily-batch cadence,
-    O1, without giving up streaming semantics — restart with the same
-    checkpoint and it resumes incrementally).
+    """The full ingest query, run to completion by
+    :func:`~nsp_bolt_pipeline_spark.streaming.run.run_available_now`
+    (the reference's daily-batch cadence, O1, without giving up
+    streaming semantics — restart with the same checkpoint and it
+    resumes incrementally).
 
     Per micro-batch: coerce/validate (P2/P3) -> rejects to the DLQ
     (S8) -> first-write-wins within the batch (D1/D2, deterministic
@@ -207,51 +221,37 @@ def run_ingest(
                 f"{dlq_dir}/batch={batch_id}"
             )
             winners = first_write_wins(valid, dedup_keys, order_cols)
-            min_event_date = None
-            n_dates = 1
-            dom_frac = 1.0
             if horizon_on:
                 winners = winners.withColumn(
                     EVENT_DATE_COL, F.to_date(F.col(dedup_ts_col))
                 )
-                # Anchor the horizon on VALID rows, not on `winners` —
-                # that would re-run the dedup shuffle as a second job
-                # per batch, while `valid` is only map-side work
-                # (coerce + filter) over the persisted batch. Valid's
-                # min is a valid (>=-tight) lower bound because
-                # winners is a subset of valid; counting dates after
-                # validation also keeps corrupt timestamps (rejected
-                # rows) out of the salt decision. The per-date counts
-                # additionally surface the DOMINANT date's share, so a
-                # mostly-single-date batch polluted by a few stray
-                # parseable dates keeps its key-hash salt instead of
-                # silently serializing the hot date into one task
-                # (perf advice, round 5). Cost: one bookkeeping
-                # shuffle whose map-side partials collapse to
-                # (partitions x dates) rows — noise next to the dedup
-                # shuffle it sizes the write for.
-                row = (
-                    valid.groupBy(
-                        F.to_date(F.col(dedup_ts_col)).alias("_d")
-                    )
-                    .agg(F.count("*").alias("_c"))
-                    .filter(F.col("_d").isNotNull())
-                    .agg(
-                        F.min("_d").alias("lo"),
-                        F.count("*").alias("nd"),
-                        F.max("_c").alias("dom"),
-                        F.sum("_c").alias("tot"),
-                    )
-                    .collect()[0]
-                )
-                if row["lo"] is not None:
-                    min_event_date = row["lo"] - _dt.timedelta(
-                        days=dedup_horizon_days
-                    )
-                n_dates = max(1, row["nd"])
-                if row["tot"]:
-                    dom_frac = row["dom"] / row["tot"]
-                # all-null/empty batch: fall back to the unbounded scan
+            # One bookkeeping aggregate per batch, row counts per
+            # (event date, partition tuple), sizes the write and
+            # anchors the horizon. It counts VALID rows, not `winners`:
+            # that would re-run the dedup shuffle, while `valid` is
+            # map-side work over the persisted batch. Winners are a
+            # subset of valid, so valid's min date is a safe lower
+            # bound, and corrupt timestamps stay out of the salt
+            # decision.
+            per_date: dict = {}
+            ptuples = set()
+            if bronze_parts:
+                by = [F.to_date(F.col(dedup_ts_col))] if horizon_on else []
+                for *key, n in (
+                    valid.groupBy(*by, *partition_cols).count().collect()
+                ):
+                    if horizon_on:
+                        d, *key = key
+                        if d is not None:
+                            per_date[d] = per_date.get(d, 0) + n
+                    if None not in key:
+                        ptuples.add(tuple(key))
+            # an all-null/empty batch leaves the key scan unbounded
+            min_event_date = (
+                min(per_date) - _dt.timedelta(days=dedup_horizon_days)
+                if per_date
+                else None
+            )
             # existence probe, not try/except PATH_NOT_FOUND: reading
             # a nonexistent dir makes FileStreamSink log a spurious
             # WARN stack trace even when the exception is caught
@@ -259,29 +259,10 @@ def run_ingest(
                 seen = seen_keys(
                     spark,
                     bronze_dir,
-                    dedup_keys,
+                    T.StructType([winners.schema[k] for k in dedup_keys]),
                     min_event_date=min_event_date,
                 )
                 winners = winners.join(seen, list(dedup_keys), "left_anti")
-            # Caller-supplied partition columns contribute their own
-            # spread to the useful write-task count: n_dates alone
-            # (pinned to 1 when horizon is off) would collapse a
-            # many-tenant batch into eff_salt tasks — a write-
-            # parallelism regression vs the count-less repartition
-            # this explicit width replaced (round-6 advice). One
-            # bookkeeping count-distinct job, map-side partials, only
-            # paid by partitioned ingests.
-            n_ptuples = 1
-            if partition_cols:
-                n_ptuples = max(
-                    1,
-                    valid.agg(
-                        F.count_distinct(
-                            *[F.col(c) for c in partition_cols]
-                        )
-                    ).first()[0]
-                    or 1,
-                )
             if bronze_parts:
                 # co-locate each output partition before the dynamic-
                 # partition write: without this every shuffle task
@@ -291,15 +272,23 @@ def run_ingest(
                 # key-hash salt keeps one hot date from serializing
                 # into a single task; files per dir per batch is
                 # bounded by the salt width instead. The width ADAPTS
-                # to the batch's date spread (counted above, same agg
-                # as the horizon min): a production-cadence trigger
-                # touches 1-2 dates and keeps the full salt, while a
-                # replay/backfill batch spanning many dates already
-                # gets its write parallelism from the date dimension —
-                # per-dir volume shrinks as 1/n_dates, so the salt
-                # would only multiply small files and commit renames
+                # to the batch's date spread (counted above): a
+                # production-cadence trigger touches 1-2 dates and
+                # keeps the full salt, while a replay/backfill batch
+                # spanning many dates already gets its write
+                # parallelism from the date dimension — per-dir volume
+                # shrinks as 1/n_dates, so the salt would only
+                # multiply small files and commit renames
                 # (measured: ~30% of the availableNow whole-month
                 # replay's wall-time at sf0.1).
+                n_dates = max(1, len(per_date))
+                # the dominant date's share keeps the salt on a hot
+                # date that carries a few stray dates along
+                dom_frac = (
+                    max(per_date.values()) / sum(per_date.values())
+                    if per_date
+                    else 1.0
+                )
                 eff_salt = _effective_salt(
                     n_dates, dom_frac, files_per_partition
                 )
@@ -316,9 +305,11 @@ def run_ingest(
                 # the product over-counts on a backfill touching many
                 # (date x tenant) combos and would multiply small
                 # files; with max, a task holds a few partition tuples
-                # and still writes one file per dir it owns
+                # and still writes one file per dir it owns. Caller
+                # partition columns count too: n_dates alone would
+                # squeeze a many-tenant batch into eff_salt tasks.
                 winners = winners.repartition(
-                    max(1, n_dates, n_ptuples) * eff_salt,
+                    max(n_dates, len(ptuples)) * eff_salt,
                     *[F.col(c) for c in bronze_parts],
                     salt,
                 )
@@ -329,13 +320,9 @@ def run_ingest(
         finally:
             batch.unpersist()
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()
 
 
 def run_silver_upsert(
@@ -390,13 +377,9 @@ def run_silver_upsert(
             f"{silver_root}/v={batch_id}"
         )
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()
 
     spark = stream.sparkSession
     jvm = spark._jvm
@@ -689,13 +672,9 @@ def run_corpus_ingest(
             if routed is not None:
                 routed.unpersist()
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()
 
 
 def compact_bloom_sidecar(spark: SparkSession, sidecar_dir: str) -> int:
@@ -781,13 +760,9 @@ def run_cms_ingest(
         part = cms_build(batch, text_col="text", depth=d, width=w)
         part.write.mode("append").parquet(sketch_dir)
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()
 
 
 def run_boilerplate_ingest(
@@ -815,10 +790,6 @@ def run_boilerplate_ingest(
         cleaned = strip_segments(batch, boiler, seg_words=seg_words)
         cleaned.write.mode("append").parquet(bronze_dir)
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()

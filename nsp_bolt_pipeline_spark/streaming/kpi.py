@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
+
 
 def windowed_daily_kpis(
     stream: DataFrame,
@@ -78,14 +80,10 @@ def run_windowed_kpis_update(
             .parquet(out_dir)
         )
 
-    query = (
-        kpis.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        kpis.writeStream.foreachBatch(upsert).outputMode("update"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
 
 
 def run_windowed_kpis(
@@ -103,14 +101,10 @@ def run_windowed_kpis(
     def overwrite(batch: DataFrame, _batch_id: int) -> None:
         batch.write.mode("overwrite").parquet(out_dir)
 
-    query = (
-        kpis.writeStream.foreachBatch(overwrite)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        kpis.writeStream.foreachBatch(overwrite).outputMode("complete"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
 
 
 def hopping_kpis(

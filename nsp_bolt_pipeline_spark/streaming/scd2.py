@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from nsp_bolt_pipeline_spark.operators.scd import number_runs
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 
 
 def _list_versions(spark, history_root: str) -> list[int]:
@@ -162,13 +163,9 @@ def run_scd2_history(
             f"{history_root}/v={batch_id}"
         )
 
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir
     )
-    query.awaitTermination()
 
     spark = stream.sparkSession
     versions = _list_versions(spark, history_root)

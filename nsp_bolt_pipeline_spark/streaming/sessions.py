@@ -33,6 +33,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
+
 
 def streaming_session_agg(
     stream: DataFrame,
@@ -73,12 +75,7 @@ def run_session_agg(
 ) -> None:
     """Run the session aggregate to completion: append-mode parquet
     sink, availableNow trigger. Closed sessions land exactly once."""
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        sessions.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()

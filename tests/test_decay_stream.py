@@ -15,6 +15,7 @@ from nsp_bolt_pipeline_spark.streaming.decay import (
 )
 from nsp_bolt_pipeline_spark.streaming.ingest import read_wire_stream
 from nsp_bolt_pipeline_spark.streaming.replay import decode_event_times
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 
 WIRE = T.StructType(
     [
@@ -39,15 +40,7 @@ def _write(src, name, rows):
 def _run(spark, src, ckpt, qname):
     stream = decode_event_times(read_wire_stream(spark, src, WIRE), ["ts"])
     out = track_user_ewma(stream, horizon_ms=3_600_000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(out.writeStream.format("memory").queryName(qname), ckpt)
     return {
         r["user_id"]: (r["n_events"], r["ewma"])
         for r in spark.sql(f"SELECT * FROM {qname}").collect()
@@ -111,16 +104,12 @@ def test_ewma_state_survives_checkpoint_restart(spark, tmp_path):
         stream = decode_event_times(
             read_wire_stream(spark, src, WIRE), ["ts"]
         )
-        q = (
+        run_available_now(
             track_user_ewma(stream, horizon_ms=3_600_000)
             .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .option("path", out),
+            ckpt,
         )
-        q.awaitTermination()
         return {
             r["user_id"]: (r["n_events"], r["ewma"])
             for r in spark.read.parquet(out).collect()

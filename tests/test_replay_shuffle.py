@@ -27,6 +27,7 @@ from nsp_bolt_pipeline_spark.registry_streaming import (
     cleanup_workdirs,
     _workdir,
 )
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 
 
 @pytest.fixture(autouse=True)
@@ -71,13 +72,7 @@ def test_dump_fanout_writes_multiple_files_single_batch(spark):
     def record(batch, _bid):
         batch_sizes.append(batch.count())
 
-    q = (
-        stream.writeStream.foreachBatch(record)
-        .option("checkpointLocation", dirs["ckpt"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream.writeStream.foreachBatch(record), dirs["ckpt"])
     assert batch_sizes == [400]
 
 

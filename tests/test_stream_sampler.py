@@ -12,6 +12,7 @@ from pyspark.sql import types as T
 
 from nsp_bolt_pipeline_spark.streaming.ingest import read_wire_stream
 from nsp_bolt_pipeline_spark.streaming.replay import decode_event_times
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 from nsp_bolt_pipeline_spark.streaming.sampler import (
     SENTINEL_EVENT,
     track_daily_bottomk,
@@ -39,15 +40,7 @@ def _write(src, name, rows):
 def _run(spark, src, ckpt, qname, k):
     stream = decode_event_times(read_wire_stream(spark, src, WIRE), ["ts"])
     out = track_daily_bottomk(stream, k=k, horizon_ms=3_600_000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(out.writeStream.format("memory").queryName(qname), ckpt)
     return sorted(
         (str(r["day"]), r["event_id"])
         for r in spark.sql(f"SELECT * FROM {qname}").collect()

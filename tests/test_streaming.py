@@ -30,6 +30,7 @@ from nsp_bolt_pipeline_spark.streaming.replay import (
     decode_event_times,
     to_wire,
 )
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 
 WIRE = T.StructType(
     [
@@ -235,7 +236,12 @@ class TestIngestDedup:
         )
         lo = datetime.date(2023, 11, 17)
         plan = (
-            seen_keys(spark, bronze, ["key"], min_event_date=lo)
+            seen_keys(
+                spark,
+                bronze,
+                T.StructType([T.StructField("key", T.StringType())]),
+                min_event_date=lo,
+            )
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -327,6 +333,45 @@ class TestDLQ:
         assert any(raw and "not json" in raw for raw in raws)
         assert any(raw and "NaNope" in raw for raw in raws)
 
+    def test_all_malformed_first_batch_then_good_batch(self, spark, tmp_path):
+        """A partitioned bronze whose only append so far was an empty
+        (all-rejected) batch holds nothing but ``_SUCCESS``; the next
+        batch's key probe must read it as zero keys, not fail to infer
+        a schema, and later batches still dedup against the key read
+        back from the partition directory names."""
+        src, bronze, dlq, ckpt = _dirs(tmp_path, "src", "bronze", "dlq", "ckpt")
+        kw = {
+            "partition_cols": ["key"],
+            "dedup_ts_col": "ts",
+            "dedup_horizon_days": 7,
+        }
+        os.makedirs(src)
+        with open(os.path.join(src, "b0.json"), "w") as f:
+            f.write("{this is not json\n")
+            f.write(json.dumps({"key": "bad", "ts": T0, "fare": "nope"}) + "\n")
+        _ingest(spark, src, bronze, dlq, ckpt, **kw)
+        _write_batch(
+            src,
+            "b1.json",
+            [
+                {"key": "k1", "ts": T0, "fare": 1.0},
+                {"key": "k2", "ts": T0, "fare": 2.0},
+            ],
+        )
+        _ingest(spark, src, bronze, dlq, ckpt, **kw)
+        _write_batch(
+            src,
+            "b2.json",
+            [
+                {"key": "k1", "ts": T0 + US_PER_HOUR, "fare": 9.0},
+                {"key": "k3", "ts": T0, "fare": 3.0},
+            ],
+        )
+        _ingest(spark, src, bronze, dlq, ckpt, **kw)
+        got = {r["key"]: r["fare"] for r in spark.read.parquet(bronze).collect()}
+        assert got == {"k1": 1.0, "k2": 2.0, "k3": 3.0}
+        assert spark.read.parquet(dlq).count() == 2
+
 
 class TestDLQIdempotence:
     def test_rejects_land_in_per_batch_partitions(self, spark, tmp_path):
@@ -364,15 +409,9 @@ class TestWatermarkDedup:
         )
         stream = decode_event_times(read_wire_stream(spark, src, WIRE), ["ts"])
         deduped = stream_first_write_wins(stream, ["key"], ts_col="ts")
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("wm_dedup")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            deduped.writeStream.format("memory").queryName("wm_dedup"), ckpt
         )
-        q.awaitTermination()
         out = spark.sql("SELECT key FROM wm_dedup").collect()
         assert sorted(r["key"] for r in out) == ["k1", "k2"]
 
@@ -726,13 +765,7 @@ class TestCappedCompletion:
             "inner",
         )
         with pytest.raises(Exception, match="correctness|watermark"):
-            q = (
-                j.writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            run_available_now(j.writeStream.format("noop"), ckpt)
 
     def test_transform_with_state_still_env_blocked(self, spark, tmp_path):
         """transformWithStateInPandas (the API that relaxes stateful
@@ -1842,3 +1875,30 @@ class TestPitEnrichSnapshot:
             for ns in ("nsp_ns_a", "nsp_ns_b"):
                 spark.sql(f"DROP TABLE IF EXISTS {ns}.dim_snap")
                 spark.sql(f"DROP DATABASE IF EXISTS {ns}")
+
+
+def test_available_now_run_has_one_home():
+    """Every engine stream runs through streaming.run.run_available_now:
+    the availableNow trigger is spelled exactly once in the package, in
+    that helper, so the run contract cannot drift between call sites."""
+    import ast
+    from pathlib import Path
+
+    import nsp_bolt_pipeline_spark
+
+    root = Path(nsp_bolt_pipeline_spark.__file__).parent
+    hits = [
+        (path.relative_to(root).as_posix(), lineno)
+        for path in sorted(root.rglob("*.py"))
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if "trigger(availableNow=True)" in line
+    ]
+    assert [h[0] for h in hits] == ["streaming/run.py"], hits
+    tree = ast.parse((root / "streaming/run.py").read_text())
+    (helper,) = [
+        node
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name == "run_available_now"
+    ]
+    assert helper.lineno <= hits[0][1] <= helper.end_lineno
+    assert [a.arg for a in helper.args.args] == ["writer", "checkpoint_dir"]

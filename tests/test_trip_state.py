@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nsp_bolt_pipeline_spark.streaming.replay import decode_event_times
+from nsp_bolt_pipeline_spark.streaming.run import run_available_now
 from nsp_bolt_pipeline_spark.streaming.trip_state import track_trip_lifecycle
 
 WIRE = T.StructType(
@@ -34,15 +35,10 @@ def _run(spark, tmp_path, rows, name):
         spark.readStream.schema(WIRE).json(src), ["ts"]
     )
     out = track_trip_lifecycle(stream, timeout_ms=2 * 3600 * 1000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        out.writeStream.format("memory").queryName(name),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination()
     return {
         r["trip_id"]: r
         for r in spark.sql(f"SELECT * FROM {name}").collect()
@@ -141,15 +137,11 @@ def test_stale_rearm_does_not_crash_when_watermark_passed_horizon(
         ["ts"],
     )
     out = track_trip_lifecycle(stream, timeout_ms=2 * 3600 * 1000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stale_rearm")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
+    # without the clamp this raises StreamingQueryException
+    run_available_now(
+        out.writeStream.format("memory").queryName("stale_rearm"),
+        str(tmp_path / "ckpt2"),
     )
-    q.awaitTermination()  # without the clamp this raises StreamingQueryException
     got = {
         r["trip_id"]: r["status"]
         for r in spark.sql("SELECT * FROM stale_rearm").collect()
