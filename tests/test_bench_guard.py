@@ -102,37 +102,36 @@ def test_bench_own_artifact_rewrite_stays_clean(scratch_repo):
 
 def test_driver_sequence_bench_runs(tmp_path):
     """Simulate the driver: untracked CORRECTNESS_r{N}.json in the
-    real repo root, then invoke bench.py (one-query subset at
-    sf0.001 so the smoke stays cheap). Asserts rc=0 and a parseable
-    stdout line — the exact round-7 failure mode."""
-    state = bench._git_state(REPO)
-    if state.endswith("-dirty"):
-        pytest.skip("working tree has real uncommitted changes; the "
-                    "driver always benches a committed tree")
-    marker = os.path.join(REPO, "CORRECTNESS_r99.json")
-    if os.path.exists(marker):
-        pytest.skip("CORRECTNESS_r99.json already exists")
-    try:
-        with open(marker, "w") as f:
-            f.write("{}")
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-            SPARK_GRAFT_BENCH_NAMES="trip_daily_kpi",
-            SPARK_GRAFT_BENCH_OUT=str(tmp_path / "bench_smoke.json"),
-        )
-        proc = subprocess.run(
-            [sys.executable, "bench.py"],
-            cwd=REPO, env=env, capture_output=True, text=True,
-            timeout=600,
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        result = json.loads(proc.stdout.strip().splitlines()[-1])
-        assert "trip_daily_kpi" in result["queries"]
-        assert not result["git"].endswith("-dirty")
-    finally:
-        if os.path.exists(marker):
-            os.remove(marker)
+    repo root, then invoke bench.py (one-query subset at sf0.001 so the
+    smoke stays cheap). Asserts rc=0 and a parseable stdout line — the
+    exact round-7 failure mode.
+
+    Runs in a fresh clone of HEAD, so uncommitted edits in the working
+    tree (which would rightly stamp it dirty) cannot turn the check
+    into a skip."""
+    clone = str(tmp_path / "repo")
+    subprocess.run(
+        ["git", "clone", "-q", REPO, clone],
+        capture_output=True, text=True, check=True,
+    )
+    assert not bench._git_state(clone).endswith("-dirty")
+    with open(os.path.join(clone, "CORRECTNESS_r99.json"), "w") as f:
+        f.write("{}")
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
+        SPARK_GRAFT_BENCH_NAMES="trip_daily_kpi",
+        SPARK_GRAFT_BENCH_OUT=str(tmp_path / "bench_smoke.json"),
+    )
+    proc = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=clone, env=env, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert "trip_daily_kpi" in result["queries"]
+    assert not result["git"].endswith("-dirty")
 
 
 def test_bench_unknown_subset_name_is_an_error(tmp_path):
