@@ -557,14 +557,14 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Custom stateful operator (applyInPandasWithState): per-trip
-# lifecycle with timeout emission. Input is pre-deduped to one
-# start/end per trip so each trip runs a single state cycle, which
-# makes the machine's output SQL-expressible; the oracle replicates
-# the horizon check in exact microseconds and the event-time timeout
-# rule (fires when watermark_ms = max_event_ms - delay_ms strictly
-# exceeds start_ms + timeout_ms). Trips still open at end-of-stream
-# are, correctly, absent from both sides.
+# Per-trip lifecycle with timeout emission (watermarked dedup plus a
+# left-outer stream-stream join). Input is pre-deduped to one
+# start/end per trip, which makes the output SQL-expressible; the
+# oracle replicates the horizon check in exact microseconds and the
+# expiry rule (an unmatched start is emitted when watermark_ms =
+# max_event_ms - delay_ms strictly exceeds start_ms + timeout_ms).
+# Trips still open at end-of-stream are, correctly, absent from both
+# sides.
 # ---------------------------------------------------------------------------
 
 _LIFECYCLE_TIMEOUT_MS = 48 * 3600 * 1000

@@ -244,7 +244,7 @@ def track_debounce(
             # Clamp above the current watermark: a late batch for a key whose
             # horizon the watermark already passed would otherwise re-arm a
             # stale timeout and raise INVALID_TIMEOUT_TIMESTAMP, killing the
-            # query (same hazard as trip_state.py:127-132).
+            # query.
             expiry_ms = max(ts_us) // 1000 + horizon_ms
             state.setTimeoutTimestamp(max(expiry_ms, state.getCurrentWatermarkMs() + 1))
         return

@@ -117,8 +117,9 @@ def track_daily_bottomk(
         # lands on identical pairs), truncate to k
         pairs = sorted(set(pairs))[:k]
         state.update(([h for h, _ in pairs], [e for _, e in pairs]))
-        # Clamp above the current watermark (see trip_state.py:127-132): late
-        # rows for an already-passed horizon must not re-arm a stale timeout.
+        # Clamp above the current watermark: late rows for a day whose horizon
+        # the watermark already passed would otherwise re-arm a stale timeout
+        # and raise INVALID_TIMEOUT_TIMESTAMP, killing the query.
         expiry_ms = last_us // 1000 + horizon_ms
         state.setTimeoutTimestamp(max(expiry_ms, state.getCurrentWatermarkMs() + 1))
         return

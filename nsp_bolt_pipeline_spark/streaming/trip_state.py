@@ -1,40 +1,34 @@
-"""Custom stateful streaming operator: a per-trip state machine via
-``applyInPandasWithState`` — the escape hatch for semantics the
-built-in stateful operators can't express.
+"""Per-trip lifecycle as built-in stateful operators: watermarked
+first-write-wins dedup on each side, then a time-bounded stream-stream
+left-outer join that emits every trip once, ``completed`` or
+``expired``.
 
-The built-in stream-stream join (streaming.completion) emits completed
-trips but *silently drops* trips whose end never arrives — the same
-blind spot the reference has (README.md:413-414 admits stale
-incomplete records just accumulate in DynamoDB, cleaned up by some
-external process). This operator implements the full lifecycle:
+The inner completion join (streaming.completion) emits completed trips
+but *silently drops* trips whose end never arrives — the same blind
+spot the reference has (README.md:413-414 admits stale incomplete
+records just accumulate in DynamoDB, cleaned up by some external
+process). The left-outer form is that cleanup process as a first-class
+streaming output: an unmatched start is emitted as ``expired`` when the
+watermark passes start + timeout and the join evicts it.
 
-- first start event per trip opens the state (first-write-wins, D1),
-- first end event at/after the start closes it -> emit a ``completed``
-  row with both timestamps and the fare,
-- no end within ``timeout`` of the start -> when the event-time
-  watermark passes start + timeout, emit an ``expired`` row and drop
-  the state — the "cleanup process" the reference never built, as a
-  first-class, bounded-state streaming output.
-
-Scale notes (100 TB): state is one small row per *open* trip, keyed
-and shuffled by trip_id; completed/expired keys are removed
-immediately, and the GroupStateTimeout.EventTimeTimeout mechanism
-bounds the tail at (open-trip rate x timeout horizon) regardless of
-table history. Python executes per key-group over Arrow batches;
-state values are plain tuples — no per-row serialization.
+Scale notes (100 TB): the whole plan runs in the JVM — no per-key
+Python. State is two dedup stores (one key per trip per side, held for
+the watermark delay) plus the join's four stores (keys and values per
+side), per shuffle partition, all keyed and shuffled by trip_id. The
+dedup stores are bounded by (event rate x watermark delay) and the
+join stores by (event rate x (timeout + delay)), regardless of table
+history.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-if TYPE_CHECKING:
-    import pandas as pd
+from nsp_bolt_pipeline_spark.streaming.completion import (
+    streaming_completed_trips,
+)
 
 #: output contract: one row per resolved trip.
 TRIP_OUTCOME_SCHEMA = T.StructType(
@@ -47,9 +41,6 @@ TRIP_OUTCOME_SCHEMA = T.StructType(
     ]
 )
 
-#: state: (pickup_epoch_us,) for an open trip.
-_STATE_SCHEMA = T.StructType([T.StructField("pickup_us", T.LongType())])
-
 
 def track_trip_lifecycle(
     events: DataFrame,
@@ -58,86 +49,56 @@ def track_trip_lifecycle(
     ts_col: str = "ts",
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
-    """Wire the state machine over a unified (trip_id, event_type, ts,
-    fare) stream. ``event_type`` is 'start' or 'end'; out-of-order
-    arrival within the watermark is handled by the event-time logic
-    (an end before any start waits in no state — the reference's
-    semantics: completion requires a stored start)."""
+    """Resolve each trip of a unified (trip_id, event_type, ts, fare)
+    stream, ``event_type`` 'start' or 'end', into one outcome row of
+    :data:`TRIP_OUTCOME_SCHEMA`.
 
-    def update(
-        key: tuple,
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd  # noqa: PLC0415
+    Arrival-order contract: the first-arriving start and the
+    first-arriving end of a trip (the dedup holds each for the
+    watermark delay, so later copies are dropped) pair up if and only
+    if ``start <= end <= start + timeout``, in either arrival order —
+    an end may arrive before its start. The pair is emitted as
+    ``completed`` as soon as both have arrived. Otherwise the start is
+    emitted as ``expired`` once the watermark passes
+    ``start + timeout``; an end with no start is never emitted. Among
+    distinct same-trip starts (or ends) inside one micro-batch, the
+    survivor follows arrival order, as
+    :func:`~nsp_bolt_pipeline_spark.streaming.completion.deduped_completion_stream`
+    documents.
 
-        trip_id = key[0]
-        if state.hasTimedOut:
-            (pickup_us,) = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "trip_id": trip_id,
-                        "status": "expired",
-                        "pickup_datetime": pd.Timestamp(pickup_us, unit="us"),
-                        "dropoff_datetime": pd.NaT,
-                        "fare_amount": None,
-                    }
-                ]
-            )
-            return
+    The watermark is defined once, on the unified stream, before the
+    split: per-side watermarks fall under Spark's ``min`` policy and
+    hold the global watermark at the slower side, so the last starts
+    of a stream that ends on an end event would never expire.
+    """
+    wm = events.withWatermark(ts_col, watermark_delay)
 
-        # event_type descending so 'start' precedes 'end' on equal
-        # timestamps — a zero-duration trip in one batch must complete
-        # (the oracle's horizon check is inclusive: end >= start)
-        rows = pd.concat(list(batches)).sort_values(
-            [ts_col, "event_type"], ascending=[True, False]
-        )
-        pickup_us = state.get[0] if state.exists else None
-        out = []
-        for r in rows.itertuples(index=False):
-            ts_us = int(pd.Timestamp(getattr(r, ts_col)).value // 1000)
-            if r.event_type == "start" and pickup_us is None:
-                pickup_us = ts_us  # first-write-wins (D1)
-            elif (
-                r.event_type == "end"
-                and pickup_us is not None
-                and ts_us >= pickup_us
-                and ts_us <= pickup_us + timeout_ms * 1000
-            ):
-                out.append(
-                    {
-                        "trip_id": trip_id,
-                        "status": "completed",
-                        "pickup_datetime": pd.Timestamp(pickup_us, unit="us"),
-                        "dropoff_datetime": pd.Timestamp(ts_us, unit="us"),
-                        "fare_amount": float(r.fare),
-                    }
-                )
-                pickup_us = None  # trip resolved; state closes
-                state.remove()
-        if pickup_us is not None:
-            state.update((pickup_us,))
-            # expire once the event-time watermark passes the horizon.
-            # Clamp to above the CURRENT watermark: when a later batch
-            # delivers a non-completing event for an already-open trip
-            # whose horizon the watermark has passed (Spark routes the
-            # group as data, not timeout, when it has new rows),
-            # re-arming at the stale horizon would raise
-            # INVALID_TIMEOUT_TIMESTAMP and kill the query — the trip
-            # then expires on the next watermark tick instead.
-            expiry_ms = pickup_us // 1000 + timeout_ms
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(expiry_ms, wm_ms + 1))
-        if out:
-            yield pd.DataFrame(out)
+    def first(event_type: str) -> DataFrame:
+        return wm.filter(
+            F.col("event_type") == event_type
+        ).dropDuplicatesWithinWatermark(["trip_id"])
 
-    keyed = events.withWatermark(ts_col, watermark_delay).groupBy("trip_id")
-    return keyed.applyInPandasWithState(
-        update,
-        outputStructType=TRIP_OUTCOME_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    starts = first("start").select(
+        "trip_id", F.col(ts_col).alias("pickup_datetime")
+    )
+    ends = first("end").select(
+        "trip_id",
+        F.col(ts_col).alias("dropoff_datetime"),
+        F.col("fare").cast("double").alias("fare_amount"),
+    )
+    joined = streaming_completed_trips(
+        starts,
+        ends,
+        within=f"{timeout_ms} milliseconds",
+        assume_watermarked=True,
+        how="left_outer",
+    )
+    return joined.select(
+        "trip_id",
+        F.when(F.col("dropoff_datetime").isNull(), "expired")
+        .otherwise("completed")
+        .alias("status"),
+        "pickup_datetime",
+        "dropoff_datetime",
+        "fare_amount",
     )

@@ -1,16 +1,22 @@
-"""Tests for the applyInPandasWithState trip lifecycle operator."""
+"""Tests for the trip lifecycle operator (watermarked dedup plus a
+left-outer stream-stream join)."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import time
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nsp_bolt_pipeline_spark.streaming.replay import decode_event_times
 from nsp_bolt_pipeline_spark.streaming.run import run_available_now
-from nsp_bolt_pipeline_spark.streaming.trip_state import track_trip_lifecycle
+from nsp_bolt_pipeline_spark.streaming.trip_state import (
+    TRIP_OUTCOME_SCHEMA,
+    track_trip_lifecycle,
+)
 
 WIRE = T.StructType(
     [
@@ -25,23 +31,36 @@ US_PER_HOUR = 3_600_000_000
 T0 = 1_700_000_000_000_000
 
 
-def _run(spark, tmp_path, rows, name):
+def _run_batches(spark, tmp_path, batches, name):
+    """Run the operator over ``batches``, one micro-batch per list of
+    rows in order, and return every outcome row."""
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)
-    with open(os.path.join(src, "b0.json"), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
+    base = time.time() - len(batches)
+    for i, rows in enumerate(batches):
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+        # the file source orders by mtime: pin the batch order
+        os.utime(path, (base + i, base + i))
     stream = decode_event_times(
-        spark.readStream.schema(WIRE).json(src), ["ts"]
+        spark.readStream.schema(WIRE)
+        .option("maxFilesPerTrigger", 1)
+        .json(src),
+        ["ts"],
     )
     out = track_trip_lifecycle(stream, timeout_ms=2 * 3600 * 1000)
     run_available_now(
         out.writeStream.format("memory").queryName(name),
         str(tmp_path / "ckpt"),
     )
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def _run(spark, tmp_path, rows, name):
     return {
-        r["trip_id"]: r
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
+        r["trip_id"]: r for r in _run_batches(spark, tmp_path, [rows], name)
     }
 
 
@@ -101,14 +120,9 @@ def test_stale_rearm_does_not_crash_when_watermark_passed_horizon(
 ):
     """A later micro-batch can deliver a NON-completing event (here a
     duplicate start) for an open trip whose expiry the watermark has
-    already passed — Spark routes the group as data, and re-arming the
-    timeout at the stale horizon would raise INVALID_TIMEOUT_TIMESTAMP
-    and kill the query. The clamp re-arms above the watermark and the
-    trip expires on the next tick instead."""
-    import time
-
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
+    already passed. It must neither kill the query nor re-open the
+    trip: the dedup still holds the first start, and the trip expires
+    once."""
     b0 = [
         {"trip_id": "t", "event_type": "start", "ts": T0, "fare": None},
         # another trip far in the future drags the watermark up
@@ -123,27 +137,75 @@ def test_stale_rearm_does_not_crash_when_watermark_passed_horizon(
         {"trip_id": "w2", "event_type": "start",
          "ts": T0 + 40 * US_PER_HOUR, "fare": None},
     ]
-    with open(os.path.join(src, "b0.json"), "w") as f:
-        for r in b0:
-            f.write(json.dumps(r) + "\n")
-    time.sleep(1.1)  # file-source orders by mtime: force b0 first
-    with open(os.path.join(src, "b1.json"), "w") as f:
-        for r in b1:
-            f.write(json.dumps(r) + "\n")
-    stream = decode_event_times(
-        spark.readStream.schema(WIRE)
-        .option("maxFilesPerTrigger", 1)
-        .json(src),
-        ["ts"],
-    )
-    out = track_trip_lifecycle(stream, timeout_ms=2 * 3600 * 1000)
-    # without the clamp this raises StreamingQueryException
-    run_available_now(
-        out.writeStream.format("memory").queryName("stale_rearm"),
-        str(tmp_path / "ckpt2"),
-    )
     got = {
         r["trip_id"]: r["status"]
-        for r in spark.sql("SELECT * FROM stale_rearm").collect()
+        for r in _run_batches(spark, tmp_path, [b0, b1], "stale_rearm")
     }
     assert got.get("t") == "expired"
+
+
+def test_start_redelivered_after_completion_does_not_reopen(spark, tmp_path):
+    """A trip completes in micro-batch 0 and its start is redelivered
+    byte-identical in micro-batch 1: the dedup drops the copy, so the
+    trip keeps exactly one outcome. (A state machine that forgets a
+    trip on completion re-opens it here and later expires it.)"""
+    start = {"trip_id": "x", "event_type": "start", "ts": T0, "fare": None}
+    b0 = [
+        start,
+        {"trip_id": "x", "event_type": "end", "ts": T0 + US_PER_HOUR // 2,
+         "fare": 4.0},
+    ]
+    # the tick pushes the watermark past x's 2h horizon
+    b1 = [
+        start,
+        {"trip_id": "tick", "event_type": "start",
+         "ts": T0 + 10 * US_PER_HOUR, "fare": None},
+    ]
+    rows = _run_batches(spark, tmp_path, [b0, b1], "redelivered_start")
+    assert [r["status"] for r in rows if r["trip_id"] == "x"] == ["completed"]
+
+
+def test_end_arriving_before_start_completes(spark, tmp_path):
+    """The end of a trip arrives one micro-batch before its start: the
+    join holds the end until the start arrives and pairs them, as the
+    batch oracle (first start joined to first end by event time)
+    does."""
+    b0 = [
+        {"trip_id": "x", "event_type": "end", "ts": T0 + US_PER_HOUR // 2,
+         "fare": 6.5},
+    ]
+    b1 = [
+        {"trip_id": "x", "event_type": "start", "ts": T0, "fare": None},
+        {"trip_id": "tick", "event_type": "start",
+         "ts": T0 + 10 * US_PER_HOUR, "fare": None},
+    ]
+    rows = _run_batches(spark, tmp_path, [b0, b1], "end_before_start")
+    got = [r for r in rows if r["trip_id"] == "x"]
+    assert [(r["status"], r["fare_amount"]) for r in got] == [
+        ("completed", 6.5)
+    ]
+
+
+def test_plan_is_jvm_only_with_one_watermark(spark, tmp_path):
+    """The lifecycle runs on built-in operators (no Python state, one
+    watermark defined before the start/end split, and a left-outer
+    stream-stream join) and emits the outcome schema. The optimizer copies the watermark node into
+    both branches under one node id; per-side ``withWatermark`` calls
+    would give two ids, whose ``min`` policy holds the watermark at
+    the slower side and leaves the last starts unexpired."""
+    stream = decode_event_times(
+        spark.readStream.schema(WIRE).json(str(tmp_path)), ["ts"]
+    )
+    out = track_trip_lifecycle(stream, timeout_ms=2 * 3600 * 1000)
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in TRIP_OUTCOME_SCHEMA
+    ]
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "simple"
+    )
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert len(set(re.findall(r"EventTimeWatermark (\S+),", plan))) == 1
+    assert re.search(
+        r"StreamingSymmetricHashJoin \[[^\]]*\], \[[^\]]*\], LeftOuter,",
+        plan,
+    )

@@ -13,7 +13,9 @@ Usage:
     python tools/ab_bench.py name1,name2 [-n 3] [--sf /root/testdata/sf0.1]
 
 Requires uncommitted changes (otherwise there is nothing to A/B).
-Restores the working tree (stash pop) even on error/interrupt.
+Restores the working tree (stash pop) even on error/interrupt; if the
+pop itself fails, prints the stash ref and exits before any B run.
+Fails at the first run whose results miss a requested name.
 """
 
 from __future__ import annotations
@@ -67,6 +69,30 @@ def _run_bench(names: str, sf_dir: str) -> dict[str, float]:
     return json.loads(line)["queries"]
 
 
+def _pop_stash() -> None:
+    """Restore the working tree; on failure, say where the changes are
+    and stop, so no B run measures the bare HEAD."""
+    pop = subprocess.run(
+        ["git", "-C", REPO, "stash", "pop", "-q"],
+        capture_output=True,
+        text=True,
+        check=False,
+    )
+    if pop.returncode != 0:
+        ref = _git("rev-parse", "stash@{0}")
+        sys.exit(
+            f"git stash pop failed:\n{pop.stderr.strip()}\n"
+            f"your changes are still stashed as stash@{{0}} ({ref}); "
+            "clear the conflict and run `git stash pop`"
+        )
+
+
+def _check_names(names: list[str], run: dict[str, float]) -> None:
+    missing = [n for n in names if n not in run]
+    if missing:
+        sys.exit(f"bench ran none of: {', '.join(missing)}")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", help="comma-separated query names")
@@ -78,6 +104,7 @@ def main() -> int:
         print("working tree is clean — nothing to A/B", file=sys.stderr)
         return 2
 
+    names = [n.strip() for n in args.names.split(",") if n.strip()]
     a_runs: list[dict[str, float]] = []
     b_runs: list[dict[str, float]] = []
     for i in range(args.n):
@@ -86,11 +113,12 @@ def main() -> int:
             print(f"[{i + 1}/{args.n}] A (HEAD) ...", file=sys.stderr)
             a_runs.append(_run_bench(args.names, args.sf))
         finally:
-            _git("stash", "pop", "-q")
+            _pop_stash()
+        _check_names(names, a_runs[-1])
         print(f"[{i + 1}/{args.n}] B (working tree) ...", file=sys.stderr)
         b_runs.append(_run_bench(args.names, args.sf))
+        _check_names(names, b_runs[-1])
 
-    names = [n.strip() for n in args.names.split(",") if n.strip()]
     rows = []
     for name in names:
         a = statistics.median(r[name] for r in a_runs if name in r)
