@@ -69,7 +69,10 @@ def track_trip_lifecycle(
     The watermark is defined once, on the unified stream, before the
     split: per-side watermarks fall under Spark's ``min`` policy and
     hold the global watermark at the slower side, so the last starts
-    of a stream that ends on an end event would never expire.
+    of a stream that ends on an end event would never expire. (The
+    optimizer pushes the split below the watermark node and so copies
+    it into both branches; Spark tracks the copies, which share one
+    node id, as a single watermark over all events.)
     """
     wm = events.withWatermark(ts_col, watermark_delay)
 
