@@ -132,7 +132,7 @@ HEADLINE = [
     "neardup_incremental",
     # MDM survivorship merge over the fuzzy entity clusters
     "d10_golden_record",
-    # exact sequential debounce: applyInPandas batch + stateful twin
+    # exact sequential debounce: mapInPandas batch + session-window twin
     "t19_debounce_throttle",
     "stream_t19_debounce",
     # scorer-agreement eval: two-level-prefix exact Spearman rho

@@ -1,4 +1,4 @@
-"""Constant-column annotation + sort-key synthesis (operators P6, P7, P8).
+"""Constant-column annotation + sort-key synthesis (operators P6, P7).
 
 The reference tags rows with ``status='raw'``, ``event_type``,
 ``source`` (TripStartProcessor.py:106-113, TripEndProcessor.py:127-134)
@@ -33,16 +33,3 @@ def with_bookkeeping(
         .withColumn("event_type", F.lit(event_type))
         .withColumn("source", F.lit(source))
     )
-
-
-def money_to_decimal(df: DataFrame, cols: list[str], precision: int = 12, scale: int = 2) -> DataFrame:
-    """P8: the reference deep-converts floats to Decimal because
-    DynamoDB rejects floats (TripStartProcessor.py:47-58) and then the
-    Glue job casts straight back to double (KPI-Aggregator.py:72,80).
-    Offered for exact-fidelity bronze tables; the engine default keeps
-    DoubleType end-to-end, which is semantically what the reference
-    computes."""
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.col(c).cast(f"decimal({precision},{scale})"))
-    return out

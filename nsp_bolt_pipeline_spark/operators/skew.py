@@ -99,24 +99,6 @@ def distinct_count(
     return df.groupBy(*keys).agg(F.count_distinct(F.col(col)).alias(out))
 
 
-def approx_distinct_count(
-    df: DataFrame,
-    keys: Sequence[str],
-    col: str,
-    *,
-    rsd: float = 0.05,
-    out: str = "n_distinct_approx",
-) -> DataFrame:
-    """HyperLogLog++ distinct count per key: one pass, no dedup
-    shuffle, fixed sketch memory per key — the 100 TB path when ±rsd
-    relative error is acceptable (e.g. cardinality monitoring). Sketch
-    internals are engine-specific, so this is pytest-verified against
-    the exact baseline (error bound), not hash-matched."""
-    return df.groupBy(*keys).agg(
-        F.approx_count_distinct(F.col(col), rsd=rsd).alias(out)
-    )
-
-
 def salted_join(
     skewed: DataFrame,
     small: DataFrame,

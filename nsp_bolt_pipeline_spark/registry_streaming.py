@@ -182,9 +182,11 @@ def _replay_shuffle(
     run under normal AQE again).
 
     Only used for replays whose per-row work is JVM-vectorized or
-    whose state keys are few: a Python-stateful fold over MANY keys
-    (trip lifecycle, per-user EWMA/debounce) is CPU-bound in the
-    Python workers and keeps the session's full parallelism instead.
+    whose state keys are few: the per-key stateful replays over MANY
+    keys (trip lifecycle, per-user EWMA, debounce) keep the session's
+    full parallelism instead, since their work follows keys and state,
+    not wire bytes, and the EWMA's fold is CPU-bound in the Python
+    workers.
     Partition count is semantics-free for every entry here (all
     per-batch reductions are deterministic min_by/window/agg forms),
     which the oracle hash-compares pin."""
@@ -922,10 +924,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 h), so the final no-data batch's watermark clears every real
     session's end and append mode emits the complete answer — which
     must hash-match the BATCH session oracle exactly."""
-    from nsp_bolt_pipeline_spark.streaming.sessions import (
-        run_session_agg,
-        streaming_session_agg,
-    )
+    from nsp_bolt_pipeline_spark.operators.sessions import session_agg
 
     dirs = _workdir("stream_sessions")
     ev = read_table(spark, sf_dir, "events").select(
@@ -940,19 +939,21 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("string").alias("props"),
     )
     _dump_events_df(ev.unionByName(sentinel), dirs["src"])
-    sessions = streaming_session_agg(
-        _event_stream(spark, dirs["src"]),
-        key="user_id",
+    sessions = session_agg(
+        _event_stream(spark, dirs["src"]).withWatermark("ts", "1 hour"),
+        keys=["user_id"],
         ts_col="ts",
         gap="48 hours",
         measures={
             "n_events": F.count("*"),
             "total_value": _r2(F.sum("value")),
         },
-        watermark_delay="1 hour",
     )
     with _replay_shuffle(spark, dirs["src"]):
-        run_session_agg(sessions, out_dir=dirs["out"], checkpoint_dir=dirs["ckpt"])
+        run_available_now(
+            sessions.writeStream.format("parquet").option("path", dirs["out"]),
+            dirs["ckpt"],
+        )
     return (
         spark.read.parquet(dirs["out"])
         .filter(F.col("user_id") >= 0)

@@ -240,7 +240,7 @@ def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     out = session_agg(
         ev,
-        key="user_id",
+        keys=["user_id"],
         ts_col="ts",
         gap=SESSION_GAP,
         measures={
@@ -1526,9 +1526,11 @@ from pyspark.sql import types as T  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # Streaming greedy debounce: the sequential keep-if->=gap-after-last-
-# KEPT fold, buffered per (user, type) and folded in EVENT-TIME order
-# at timeout emission — batch boundaries and arrival order provably
-# cannot change the kept set, pinned by the batch t19 oracle.
+# KEPT fold, run per (user, type) session window of gap min_gap when
+# the session closes. A quiet gap of min_gap puts the next event past
+# every earlier one, so the fold keeps it anyway: the session split is
+# exact for any batching and arrival order, pinned by the batch t19
+# oracle and by the multi-batch tests in tests/test_decay_stream.py.
 # ---------------------------------------------------------------------------
 
 
@@ -1545,10 +1547,12 @@ def _t19_stream_sql() -> str:
 
 @query("stream_t19_debounce", _t19_stream_sql())
 def q_stream_t19_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the event dump through the buffered streaming debounce:
-    per-key state flushes by event-time timeout once the sentinel
-    pushes the final watermark, and the kept set hash-matches the
-    batch greedy fold."""
+    """Replay the event dump through the session-window streaming
+    debounce: each (user, type) session folds and emits once the
+    watermark passes its end, the sentinel pushes the final watermark
+    past every real session (its own session never closes, so it is
+    never emitted), and the kept set hash-matches the batch greedy
+    fold."""
     from nsp_bolt_pipeline_spark.registry_streaming import (
         _dump_events_df,
         _event_stream,
@@ -1580,9 +1584,7 @@ def q_stream_t19_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     stream = _event_stream(spark, dirs["src"], schema=wire_schema)
-    out = track_debounce(
-        stream, min_gap_s=T19_GAP_S, horizon_ms=3_600_000
-    )
+    out = track_debounce(stream, min_gap_s=T19_GAP_S)
     run_available_now(
         out.writeStream.format("parquet").option("path", dirs["out"]),
         dirs["ckpt"],

@@ -40,49 +40,6 @@ def write_rejects(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
 
 
-def _dataset_bytes(spark, path: str) -> int:
-    """Total on-disk bytes of a dataset via the Hadoop FileSystem API —
-    works on any Hadoop-compatible store (local, HDFS, S3A)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(jpath).getLength())
-
-
-def compact_to(
-    spark,
-    src_path: str,
-    dst_path: str,
-    *,
-    partition_cols: tuple[str, ...] = (),
-    max_records_per_file: int = 1_000_000,
-) -> None:
-    """Small-files compaction: rewrite a (partitioned) parquet dataset
-    into few large files per partition. Streaming appends produce one
-    file per micro-batch per partition; at 100 TB that degrades every
-    downstream scan (listing + open overhead dominates). Compact into
-    a NEW location and swap at the catalog/manifest level — rewriting
-    in place is not atomic without a table format (Delta/Iceberg
-    OPTIMIZE is this operation natively).
-
-    The unpartitioned branch stays parallel: target partition count is
-    sized from input bytes (~1 GiB per output file), never
-    ``coalesce(1)`` — a single task funneling the whole dataset is the
-    one shape that cannot survive 100 TB."""
-    df = spark.read.parquet(src_path)
-    if partition_cols:
-        compacted = df.repartition(*partition_cols)
-    else:
-        target = max(1, _dataset_bytes(spark, src_path) // (1 << 30))
-        compacted = df.repartition(int(target))
-    out = compacted.write.mode("overwrite").option(
-        "maxRecordsPerFile", str(max_records_per_file)
-    )
-    if partition_cols:
-        out = out.partitionBy(*partition_cols)
-    out.parquet(dst_path)
-
-
 def write_bronze_bucketed(
     df: DataFrame,
     table_name: str,

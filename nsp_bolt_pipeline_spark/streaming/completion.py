@@ -52,7 +52,7 @@ def streaming_completed_trips(
     concedes unmatched DynamoDB rows just accumulate). Outer rows thus
     arrive late by construction; end-of-stream replays must push the
     final watermark past the horizon (sentinel events, see
-    streaming/sessions.py) to flush the tail.
+    operators/sessions.py) to flush the tail.
 
     ``assume_watermarked=True`` skips the withWatermark calls — for
     inputs that already carry one (e.g. downstream of a watermarked

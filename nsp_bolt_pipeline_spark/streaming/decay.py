@@ -1,7 +1,8 @@
-"""Streaming EWMA user scores: the stateful twin of the batch
-``t12_ewma_user_score`` entry (registry_temporal).
+"""Streaming EWMA user scores and debounce: the stateful twins of the
+batch ``t12_ewma_user_score`` and ``t19_debounce_throttle`` entries
+(registry_temporal).
 
-Semantics: the score folds over events in EVENT-TIME order
+EWMA semantics: the score folds over events in EVENT-TIME order
 (s_1 = v_1, s_t = (s_{t-1} + v_t)/2 by (ts, event_id)), so arrival
 order must not matter. The operator therefore buffers each user's
 events in state and folds at emission time — exactness over
@@ -11,14 +12,14 @@ out-of-order delivery. alpha = 1/2 keeps the fold bit-portable
 (halving is exact in binary floating point; Python, the JVM, and
 DuckDB produce the identical double).
 
-Emission: event-time timeout. Each batch extends the user's timeout
-to last_event + horizon; when the watermark passes it, the buffer is
-sorted, folded, emitted once, and the state dropped. End-of-stream
-replays flush via the far-future sentinel-event pattern
-(streaming/sessions.py) — the sentinel key itself is filtered out of
+EWMA emission: event-time timeout. Each batch extends the user's
+timeout to last_event + horizon; when the watermark passes it, the
+buffer is sorted, folded, emitted once, and the state dropped.
+End-of-stream replays flush via the far-future sentinel-event pattern
+(operators/sessions.py) — the sentinel key itself is filtered out of
 the output.
 
-Contract scope: WITHIN one emission window, arrival order cannot
+EWMA contract scope: WITHIN one emission window, arrival order cannot
 change the fold (the buffer sorts by event time before folding).
 Emission boundaries themselves are horizon-gap SEGMENTATION — if a
 key goes quiet for longer than the horizon while the watermark
@@ -28,12 +29,15 @@ fold. The batch-oracle hash equality therefore holds for replays
 whose per-key events land inside one emission window (the
 single-batch sentinel-flush replays the registry runs); a dashboard
 wanting lifetime scores over segmented emissions merges them
-downstream.
+downstream. EWMA state is one (ts, id, value) triple per event
+inside the horizon per ACTIVE user; Python runs per key-group over
+Arrow batches.
 
-Scale notes (100 TB): state is one (ts, id, value) triple per event
-inside the horizon per ACTIVE user — bounded by horizon, not
-history; keys shuffle once into the state store; Python runs per
-key-group over Arrow batches.
+Debounce has no such caveat: it is a session-window aggregate whose
+split is exact (see ``track_debounce``), so its kept set equals the
+batch fold for any batching. Its state is the buffered (ts, id) pairs
+of each key's OPEN session: a key that is never quiet for
+``min_gap_s`` keeps growing its state.
 """
 
 from __future__ import annotations
@@ -45,6 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from nsp_bolt_pipeline_spark.operators.sessions import session_agg
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -158,107 +164,52 @@ DEBOUNCE_SCHEMA = T.StructType(
     ]
 )
 
-#: buffered (ts_us, event_id) pairs per (user, type) key.
-_DEBOUNCE_STATE = T.StructType(
-    [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("event_ids", T.ArrayType(T.LongType())),
-    ]
-)
-
 
 def track_debounce(
     stream: DataFrame,
     *,
     min_gap_s: int,
     ts_col: str = "ts",
-    horizon_ms: int = 3_600_000,
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
-    """Streaming twin of operators.timeseries.debounce_events: the
-    greedy keep-if->=gap-after-last-kept fold is sequential in EVENT
-    TIME, so (exactly like the EWMA twin above) the operator buffers
-    each key's events in state and folds once at event-time-timeout
-    emission — within an emission window, arrival order cannot
-    change the kept set, which the batch oracle's hash compare pins.
-    The module-docstring segmentation caveat applies: a quiet gap
-    longer than the horizon under a mid-stream watermark advance
-    starts a fresh fold (whose first event is always kept), so the
-    batch-equality contract is per emission window. State is
-    (ts, id) pairs within the horizon per active key."""
-
-    def update(
-        key: tuple,
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        user_id, event_type = key
-        if state.hasTimedOut:
-            ts_us, event_ids = state.get
-            state.remove()
-            if user_id != SENTINEL_USER and event_ids:
-                import numpy as np
-
-                pairs = sorted(zip(ts_us, event_ids))
-                kept_t, kept_e = [], []
-                last = None
-                for t, e in pairs:
-                    if last is None or t >= last + min_gap_s * 1_000_000:
-                        kept_t.append(t)
-                        kept_e.append(e)
-                        last = t
-                # typed numpy columns, not Python lists: the flush
-                # batch runs this once per key, and pandas block
-                # construction + dtype inference over lists measured
-                # ~190 us/key vs ~95 us/key from ready ndarrays — the
-                # greedy fold itself is ~3 us (guide §4.2; the emit
-                # cost IS the flush batch at corpus key counts)
-                n = len(kept_e)
-                yield pd.DataFrame(
-                    {
-                        "user_id": np.full(n, user_id, dtype=np.int64),
-                        "event_type": np.full(n, event_type, dtype=object),
-                        "event_id": np.asarray(kept_e, dtype=np.int64),
-                        "ts_us": np.asarray(kept_t, dtype=np.int64),
-                    },
-                    copy=False,
+    """Streaming twin of operators.timeseries.debounce_events: keep an
+    event iff it is >= ``min_gap_s`` after the last KEPT event of its
+    (user, type) key. A quiet gap of more than ``min_gap_s`` puts the
+    next event past every earlier one, so the greedy fold always keeps
+    it: splitting each key into session windows of gap ``min_gap_s``
+    and folding per session gives exactly the whole-history kept set,
+    for any batching or arrival order. The fold runs when a session
+    closes, over its events sorted by (ts, event_id), as a
+    higher-order ``aggregate`` — built-in operators only. Each kept
+    event copies the kept array, so a session costs O(events + kept^2);
+    kept events per session are at most its span / ``min_gap_s`` + 1."""
+    gap_us = min_gap_s * 1_000_000
+    sessions = session_agg(
+        stream.withWatermark(ts_col, watermark_delay),
+        keys=["user_id", "event_type"],
+        ts_col=ts_col,
+        gap=f"{min_gap_s} seconds",
+        measures={
+            "seq": F.array_sort(
+                F.collect_list(
+                    F.struct(F.unix_micros(ts_col).alias("ts_us"), "event_id")
                 )
-            return
-
-        ts_us, event_ids = state.get if state.exists else ([], [])
-        ts_us, event_ids = list(ts_us), list(event_ids)
-        for pdf in pdfs:
-            # vectorized batch ingest — see track_user_ewma
-            ts_us.extend(
-                (
-                    pdf[ts_col].to_numpy(dtype="datetime64[ns]")
-                    .astype("int64")
-                    // 1000
-                ).tolist()
             )
-            event_ids.extend(pdf["event_id"].astype("int64").tolist())
-        state.update((ts_us, event_ids))
-        if ts_us:
-            # Clamp above the current watermark: a late batch for a key whose
-            # horizon the watermark already passed would otherwise re-arm a
-            # stale timeout and raise INVALID_TIMEOUT_TIMESTAMP, killing the
-            # query.
-            expiry_ms = max(ts_us) // 1000 + horizon_ms
-            state.setTimeoutTimestamp(max(expiry_ms, state.getCurrentWatermarkMs() + 1))
-        return
-        yield  # pragma: no cover — makes `update` a generator
-
-    watermarked = stream.withWatermark(ts_col, watermark_delay)
-    return (
-        watermarked.groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            update,
-            DEBOUNCE_SCHEMA,
-            _DEBOUNCE_STATE,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-        .filter(F.col("user_id") != SENTINEL_USER)
+        },
     )
+    first = F.element_at("seq", 1)
+    kept = F.aggregate(
+        F.slice("seq", 2, F.size("seq") - 1),
+        F.struct(first["ts_us"].alias("last"), F.array(first).alias("kept")),
+        lambda acc, e: F.when(
+            e["ts_us"] >= acc["last"] + gap_us,
+            F.struct(
+                e["ts_us"].alias("last"),
+                F.array_append(acc["kept"], e).alias("kept"),
+            ),
+        ).otherwise(acc),
+        lambda acc: acc["kept"],
+    )
+    return sessions.select(
+        "user_id", "event_type", F.explode(kept).alias("k")
+    ).select("user_id", "event_type", "k.event_id", "k.ts_us")

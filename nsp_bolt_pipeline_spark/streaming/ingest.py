@@ -121,8 +121,9 @@ def seen_keys(
     *,
     min_event_date=None,
 ) -> DataFrame:
-    """The cross-batch dedup probe: distinct key tuples already in
-    bronze. With ``min_event_date`` set (a ``date`` value), the scan is
+    """The cross-batch dedup probe: the key tuples already in bronze,
+    the build side of a left-anti join, which needs no distinct pass.
+    With ``min_event_date`` set (a ``date`` value), the scan is
     pruned to ``event_date`` partitions at or after it — a partition-
     pruned read (PartitionFilters in the scan node), so per-batch cost
     is bounded by the horizon, not by total table age.
@@ -141,7 +142,7 @@ def seen_keys(
     seen = spark.read.schema(schema).parquet(bronze_dir)
     if min_event_date is not None:
         seen = seen.filter(F.col(EVENT_DATE_COL) >= F.lit(min_event_date))
-    return seen.select(*key_schema.names).dropDuplicates()
+    return seen.select(*key_schema.names)
 
 
 def _effective_salt(

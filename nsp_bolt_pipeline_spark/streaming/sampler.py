@@ -18,7 +18,7 @@ truncates, so a day's state is k (hash, event_id) pairs no matter how
 many billions of events the day saw. Emission is event-time timeout
 (watermark passes day end + horizon), one batch of k rows per day;
 end-of-stream replays flush via the far-future sentinel-event pattern
-(streaming/sessions.py).
+(operators/sessions.py).
 
 Scale notes (100 TB): the hash is computed JVM-side (``F.md5``)
 before the stateful shuffle, so Python touches only candidate rows;

@@ -1,16 +1,20 @@
-"""Streaming EWMA (streaming/decay.py): arrival order across
-micro-batches must not change the emitted score — the state buffers
-and folds in event-time order at flush."""
+"""Streaming EWMA and debounce (streaming/decay.py): arrival order
+and micro-batch boundaries must not change the emitted score or the
+kept set."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import time
 
 from pyspark.sql import types as T
 
 from nsp_bolt_pipeline_spark.streaming.decay import (
+    DEBOUNCE_SCHEMA,
     SENTINEL_USER,
+    track_debounce,
     track_user_ewma,
 )
 from nsp_bolt_pipeline_spark.streaming.ingest import read_wire_stream
@@ -124,3 +128,130 @@ def test_ewma_state_survives_checkpoint_restart(spark, tmp_path):
     for v in [2.0, 3.0, 4.0, 5.0]:
         s = s * 0.5 + v * 0.5
     assert run_once() == {7: (5, s)}
+
+
+DEBOUNCE_WIRE = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.LongType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+    ]
+)
+DAY_S = 86_400
+
+
+def _ev(event_id, hour, user_id):
+    return {
+        "event_id": event_id,
+        "ts": T0 + hour * HOUR_US,
+        "user_id": user_id,
+        "event_type": "click",
+    }
+
+
+DEBOUNCE_SENTINEL = _ev(0, 200, SENTINEL_USER)
+
+
+def _write_batches(src, batches, first=0):
+    """One file per micro-batch; the file source orders by mtime, so
+    pin the batch order."""
+    base = time.time() - 100
+    for i, rows in enumerate(batches, first):
+        path = os.path.join(src, f"b{i}.json")
+        _write(src, f"b{i}.json", rows)
+        os.utime(path, (base + i, base + i))
+
+
+def _debounce_stream(spark, src):
+    return decode_event_times(
+        spark.readStream.schema(DEBOUNCE_WIRE)
+        .option("maxFilesPerTrigger", 1)
+        .json(src),
+        ["ts"],
+    )
+
+
+def _run_debounce(spark, src, ckpt, out):
+    # parquet sink: the memory sink cannot recover a checkpoint
+    run_available_now(
+        track_debounce(_debounce_stream(spark, src), min_gap_s=DAY_S)
+        .writeStream.format("parquet")
+        .option("path", out),
+        ckpt,
+    )
+    return sorted(r["event_id"] for r in spark.read.parquet(out).collect())
+
+
+def test_debounce_kept_set_does_not_depend_on_batches(spark, tmp_path):
+    """User 1 has events 1, 4, 6 at 0 h, 5 h, 30 h; user 2 has 2, 3, 5
+    at 3 h, 4 h, 6 h; min gap 1 day. The greedy fold keeps 1, 6 and 2.
+    Event 4 is 5 h after kept event 1: the watermark passing an hour of
+    quiet between them must not restart user 1's fold."""
+    e = {
+        1: _ev(1, 0, 1), 4: _ev(4, 5, 1), 6: _ev(6, 30, 1),
+        2: _ev(2, 3, 2), 3: _ev(3, 4, 2), 5: _ev(5, 6, 2),
+    }
+    src = str(tmp_path / "s")
+    _write_batches(
+        src,
+        [[e[1], e[2]], [e[3]], [e[4], e[5], e[6]], [DEBOUNCE_SENTINEL]],
+    )
+    got = _run_debounce(
+        spark, src, str(tmp_path / "c"), str(tmp_path / "o")
+    )
+    assert got == [1, 2, 6]
+
+
+def test_debounce_restart_from_checkpoint_keeps_same_set(spark, tmp_path):
+    """The probe above over two availableNow runs on one checkpoint:
+    open sessions carry over the restart, so the kept set is the
+    same."""
+    e = {
+        1: _ev(1, 0, 1), 4: _ev(4, 5, 1), 6: _ev(6, 30, 1),
+        2: _ev(2, 3, 2), 3: _ev(3, 4, 2), 5: _ev(5, 6, 2),
+    }
+    src, ckpt, out = (
+        str(tmp_path / "s"),
+        str(tmp_path / "c"),
+        str(tmp_path / "o"),
+    )
+    _write_batches(src, [[e[1], e[2]], [e[3]]])
+    assert _run_debounce(spark, src, ckpt, out) == []  # sessions open
+    _write_batches(src, [[e[4], e[5], e[6]], [DEBOUNCE_SENTINEL]], first=2)
+    assert _run_debounce(spark, src, ckpt, out) == [1, 2, 6]
+
+
+def test_debounce_drops_row_older_than_watermark(spark, tmp_path):
+    """A row for user 1 at 1 h arrives after the watermark (49 h) has
+    closed and emitted user 1's first session: it is dropped, and the
+    query still completes."""
+    src = str(tmp_path / "s")
+    _write_batches(
+        src,
+        [
+            [_ev(1, 0, 1)],
+            [_ev(2, 50, 1)],
+            [_ev(3, 1, 1)],
+            [DEBOUNCE_SENTINEL],
+        ],
+    )
+    got = _run_debounce(
+        spark, src, str(tmp_path / "c"), str(tmp_path / "o")
+    )
+    assert got == [1, 2]
+
+
+def test_debounce_plan_is_session_window_without_python(spark, tmp_path):
+    """The debounce runs on the built-in session-window state store
+    under one watermark, with no Python state, and emits its schema."""
+    out = track_debounce(_debounce_stream(spark, str(tmp_path)), min_gap_s=DAY_S)
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in DEBOUNCE_SCHEMA
+    ]
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "simple"
+    )
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert len(set(re.findall(r"EventTimeWatermark (\S+),", plan))) == 1
+    assert "SessionWindowStateStoreSave" in plan

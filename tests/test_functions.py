@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from nsp_bolt_pipeline_spark.functions.datetime import parse_wire_timestamp
 from nsp_bolt_pipeline_spark.functions.scalar import (
-    money_to_decimal,
     sort_key,
     with_bookkeeping,
 )
@@ -106,11 +105,3 @@ def test_sort_key_and_bookkeeping(spark):
         "start",
         "start_processor",
     )
-
-
-def test_money_to_decimal_fidelity(spark):
-    # P8: DynamoDB Decimal storage equivalence.
-    df = spark.createDataFrame([(12.5,)], "fare double")
-    out = money_to_decimal(df, ["fare"])
-    assert dict(out.dtypes)["fare"] == "decimal(12,2)"
-    assert float(out.collect()[0].fare) == 12.5

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nsp_bolt_pipeline_spark.operators.skew import (
-    approx_distinct_count,
     distinct_count,
     salted_agg,
 )
@@ -69,23 +68,6 @@ def test_salted_agg_fans_hot_key_across_buckets(spark):
         .count()
     )
     assert n_buckets == 8  # the hot key really spreads over all buckets
-
-
-def test_approx_distinct_within_rsd_of_exact(spark):
-    df = spark.range(5000).select(
-        (F.col("id") % 3).cast("string").alias("k"),
-        (F.col("id") % 1237).alias("u"),
-    )
-    exact = {
-        r["k"]: r["n_distinct"]
-        for r in distinct_count(df, ["k"], "u").collect()
-    }
-    approx = {
-        r["k"]: r["n_distinct_approx"]
-        for r in approx_distinct_count(df, ["k"], "u", rsd=0.05).collect()
-    }
-    for k, n in exact.items():
-        assert abs(approx[k] - n) <= 3 * 0.05 * n  # 3-sigma bound
 
 
 def test_approx_sketches_query_bounds(spark):

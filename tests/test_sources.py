@@ -1,4 +1,4 @@
-"""Reader-side tests (S1 CSV scan, S3 JSON/base64 decode) and the
+"""Reader-side tests (S3 JSON/base64 decode) and the
 bucketed-bronze shuffle-free join (the J1 scale path)."""
 
 from __future__ import annotations
@@ -12,31 +12,8 @@ from nsp_bolt_pipeline_spark.operators.completion import completed_trips
 from nsp_bolt_pipeline_spark.sources.readers import (
     decode_base64_payload,
     parse_json_column,
-    read_csv_events,
 )
 from nsp_bolt_pipeline_spark.sources.sinks import write_bronze_bucketed
-
-CSV_SCHEMA = T.StructType(
-    [
-        T.StructField("trip_id", T.StringType()),
-        T.StructField("pickup_datetime", T.StringType()),
-        T.StructField("fare_amount", T.StringType()),
-    ]
-)
-
-
-def test_csv_scan_with_declared_schema(spark, tmp_path):
-    p = tmp_path / "events.csv"
-    p.write_text(
-        "trip_id,pickup_datetime,fare_amount\n"
-        "t1,11/07/2024 14:00,12.5\n"
-        "t2,2024-07-11 15:30:00,20.0\n"
-    )
-    df = read_csv_events(spark, str(p), CSV_SCHEMA)
-    assert df.schema == CSV_SCHEMA  # declared, never inferred
-    rows = sorted(df.collect())
-    assert rows[0]["trip_id"] == "t1" and rows[1]["fare_amount"] == "20.0"
-
 
 def test_base64_then_json_decode_path(spark):
     df = spark.createDataFrame([('{"trip_id": "t9", "fare": 3.5}',)], ["raw"])

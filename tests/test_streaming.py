@@ -499,36 +499,6 @@ class TestUpdateModeKPI:
         assert final[max(final)]["total_fare"] == 30.0
 
 
-class TestCompaction:
-    def test_compact_to_reduces_file_count_preserving_data(self, spark, tmp_path):
-        from nsp_bolt_pipeline_spark.sources.sinks import compact_to
-
-        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-        # simulate streaming appends: many single-row files per partition
-        for i in range(12):
-            spark.createDataFrame(
-                [(i, "d1" if i % 2 else "d2", float(i))], "id long, p string, v double"
-            ).write.mode("append").partitionBy("p").parquet(src)
-        n_small = sum(
-            f.endswith(".parquet")
-            for d in os.listdir(src)
-            if d.startswith("p=")
-            for f in os.listdir(os.path.join(src, d))
-        )
-        assert n_small >= 12
-        compact_to(spark, src, dst, partition_cols=("p",))
-        n_big = sum(
-            f.endswith(".parquet")
-            for d in os.listdir(dst)
-            if d.startswith("p=")
-            for f in os.listdir(os.path.join(dst, d))
-        )
-        assert n_big < n_small / 2
-        a = sorted(map(tuple, spark.read.parquet(src).select("id", "v").collect()))
-        b = sorted(map(tuple, spark.read.parquet(dst).select("id", "v").collect()))
-        assert a == b
-
-
 class TestStreamStreamJoin:
     def test_join_respects_time_bound_and_requires_both_sides(
         self, spark, tmp_path
@@ -1275,7 +1245,7 @@ def test_bloom_sidecar_mixed_era_segments_read_null_safe(spark, tmp_path):
 
 class TestStreamingSessions:
     """Watermarked session_window agg: late-event merging and the
-    sentinel-flush emission contract (streaming.sessions)."""
+    sentinel-flush emission contract (operators.sessions)."""
 
     SCHEMA = T.StructType(
         [
@@ -1286,10 +1256,7 @@ class TestStreamingSessions:
     )
 
     def _run(self, spark, tmp_path, batches):
-        from nsp_bolt_pipeline_spark.streaming.sessions import (
-            run_session_agg,
-            streaming_session_agg,
-        )
+        from nsp_bolt_pipeline_spark.operators.sessions import session_agg
 
         src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
         for i, rows in enumerate(batches):
@@ -1297,15 +1264,16 @@ class TestStreamingSessions:
         stream = decode_event_times(
             read_wire_stream(spark, src, self.SCHEMA), ["ts"]
         )
-        sessions = streaming_session_agg(
-            stream,
-            key="user_id",
+        sessions = session_agg(
+            stream.withWatermark("ts", "1 hour"),
+            keys=["user_id"],
             ts_col="ts",
             gap="2 hours",
             measures={"n_events": F.count("*"), "total": F.sum("value")},
-            watermark_delay="1 hour",
         )
-        run_session_agg(sessions, out_dir=out, checkpoint_dir=ckpt)
+        run_available_now(
+            sessions.writeStream.format("parquet").option("path", out), ckpt
+        )
         return (
             spark.read.parquet(out)
             .filter(F.col("user_id") >= 0)
@@ -1902,3 +1870,30 @@ def test_available_now_run_has_one_home():
     ]
     assert helper.lineno <= hits[0][1] <= helper.end_lineno
     assert [a.arg for a in helper.args.args] == ["writer", "checkpoint_dir"]
+
+
+def test_pandas_state_operators_are_the_known_two():
+    """applyInPandasWithState runs Python once per key per micro-batch.
+    Only the per-user EWMA and the daily bottom-k still need it; the
+    debounce and the trip lifecycle run on built-in stateful operators,
+    and a new call site must not slip in unnoticed."""
+    import ast
+    from pathlib import Path
+
+    import nsp_bolt_pipeline_spark
+
+    root = Path(nsp_bolt_pipeline_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            hits.extend(
+                (path.relative_to(root).as_posix(), getattr(top, "name", None))
+                for node in ast.walk(top)
+                if isinstance(node, ast.Attribute)
+                and node.attr == "applyInPandasWithState"
+            )
+    assert hits == [
+        ("streaming/decay.py", "track_user_ewma"),
+        ("streaming/sampler.py", "track_daily_bottomk"),
+    ], hits

@@ -158,7 +158,7 @@ def test_session_agg_gap_boundary_is_inclusive(spark):
     )
     out = session_agg(
         df,
-        key="user",
+        keys=["user"],
         ts_col="ts",
         gap="30 minutes",
         measures={"n": F.count("*"), "s": F.sum("v")},
