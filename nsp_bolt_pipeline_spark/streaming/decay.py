@@ -178,7 +178,9 @@ def track_debounce(
     next event past every earlier one, so the greedy fold always keeps
     it: splitting each key into session windows of gap ``min_gap_s``
     and folding per session gives exactly the whole-history kept set,
-    for any batching or arrival order. The fold runs when a session
+    for any batching and any arrival order within the watermark delay
+    (older rows, and rows with a null ``ts``, are dropped; they open
+    no session). The fold runs when a session
     closes, over its events sorted by (ts, event_id), as a
     higher-order ``aggregate`` — built-in operators only. Each kept
     event copies the kept array, so a session costs O(events + kept^2);

@@ -152,15 +152,24 @@ def _ev(event_id, hour, user_id):
 
 DEBOUNCE_SENTINEL = _ev(0, 200, SENTINEL_USER)
 
+#: user 1 has events 1, 4, 6 at 0 h, 5 h, 30 h; user 2 has 2, 3, 5 at
+#: 3 h, 4 h, 6 h; one list per micro-batch. With a 1-day gap the greedy
+#: fold keeps 1, 6 and 2.
+PROBE_BATCHES = [
+    [_ev(1, 0, 1), _ev(2, 3, 2)],
+    [_ev(3, 4, 2)],
+    [_ev(4, 5, 1), _ev(5, 6, 2), _ev(6, 30, 1)],
+    [DEBOUNCE_SENTINEL],
+]
+
 
 def _write_batches(src, batches, first=0):
     """One file per micro-batch; the file source orders by mtime, so
     pin the batch order."""
     base = time.time() - 100
     for i, rows in enumerate(batches, first):
-        path = os.path.join(src, f"b{i}.json")
         _write(src, f"b{i}.json", rows)
-        os.utime(path, (base + i, base + i))
+        os.utime(os.path.join(src, f"b{i}.json"), (base + i, base + i))
 
 
 def _debounce_stream(spark, src):
@@ -184,19 +193,10 @@ def _run_debounce(spark, src, ckpt, out):
 
 
 def test_debounce_kept_set_does_not_depend_on_batches(spark, tmp_path):
-    """User 1 has events 1, 4, 6 at 0 h, 5 h, 30 h; user 2 has 2, 3, 5
-    at 3 h, 4 h, 6 h; min gap 1 day. The greedy fold keeps 1, 6 and 2.
-    Event 4 is 5 h after kept event 1: the watermark passing an hour of
-    quiet between them must not restart user 1's fold."""
-    e = {
-        1: _ev(1, 0, 1), 4: _ev(4, 5, 1), 6: _ev(6, 30, 1),
-        2: _ev(2, 3, 2), 3: _ev(3, 4, 2), 5: _ev(5, 6, 2),
-    }
+    """Event 4 is 5 h after kept event 1: the watermark passing an hour
+    of quiet between them must not restart user 1's fold."""
     src = str(tmp_path / "s")
-    _write_batches(
-        src,
-        [[e[1], e[2]], [e[3]], [e[4], e[5], e[6]], [DEBOUNCE_SENTINEL]],
-    )
+    _write_batches(src, PROBE_BATCHES)
     got = _run_debounce(
         spark, src, str(tmp_path / "c"), str(tmp_path / "o")
     )
@@ -204,21 +204,16 @@ def test_debounce_kept_set_does_not_depend_on_batches(spark, tmp_path):
 
 
 def test_debounce_restart_from_checkpoint_keeps_same_set(spark, tmp_path):
-    """The probe above over two availableNow runs on one checkpoint:
-    open sessions carry over the restart, so the kept set is the
-    same."""
-    e = {
-        1: _ev(1, 0, 1), 4: _ev(4, 5, 1), 6: _ev(6, 30, 1),
-        2: _ev(2, 3, 2), 3: _ev(3, 4, 2), 5: _ev(5, 6, 2),
-    }
+    """The probe over two availableNow runs on one checkpoint: open
+    sessions carry over the restart, so the kept set is the same."""
     src, ckpt, out = (
         str(tmp_path / "s"),
         str(tmp_path / "c"),
         str(tmp_path / "o"),
     )
-    _write_batches(src, [[e[1], e[2]], [e[3]]])
+    _write_batches(src, PROBE_BATCHES[:2])
     assert _run_debounce(spark, src, ckpt, out) == []  # sessions open
-    _write_batches(src, [[e[4], e[5], e[6]], [DEBOUNCE_SENTINEL]], first=2)
+    _write_batches(src, PROBE_BATCHES[2:], first=2)
     assert _run_debounce(spark, src, ckpt, out) == [1, 2, 6]
 
 
